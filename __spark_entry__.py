@@ -657,9 +657,10 @@ def q_dictionary_mentions(spark, sf_dir):
 def q_dictionary_mentions_mapside(spark, sf_dir):
     """Map-side dictionary detection — the at-scale default strategy
     (bounded hot-head automaton + relational n-gram tail join,
-    mentions.py detect_dictionary_mentions_mapside): hot_k=1 pins only the
-    shortest alias in the head so the tail join (incl. two bigram aliases)
-    carries the weight; oracle = token/bigram position scan in SQL."""
+    mentions.py detect_dictionary_mentions_mapside_sentences): hot_k=1
+    pins only the shortest alias in the head so the tail join (incl. two
+    bigram aliases) carries the weight; oracle = token/bigram position
+    scan in SQL."""
     from fact_extraction_spark.operators.mentions import (
         collect_alias_broadcast, detect_dictionary_mentions_mapside_sentences,
         split_alias_dictionary)

@@ -1,27 +1,51 @@
 """Stage 2: mention detection.
 
-Two detectors share the frozen tokenizer so spans always line up:
+One scan kernel (``scan_kernel``) does all of it: html → sentences →
+tokens → spans, in one pure-Python sentence loop run through one
+iterator-form ``mapInPandas``, so the automaton, probe and anchor-cache
+set-up happen once per task. It takes one of two inputs:
 
-* ``tag_anchor_mentions`` — reference-parity tagging: the entities a sentence
-  mentions are the targets of its hyperlink anchors, located at token level
-  (semantics of tagged_sentence.py:17-64,78-83 TokenMatcher + the
-  capitalize hotfix :232-233), resolved through the redirect dictionary at
-  match time (the reference instead rewrote the whole dump in a setup pass,
-  data_cleaning/redirects_substitutor.py:136-168 — resolving at match time
-  avoids rewriting 10^12 documents).
-* ``detect_dictionary_mentions`` — the north-star detector: one Aho-Corasick
-  automaton over the FULL alias dictionary (titles ∪ redirects), built once
-  per executor inside the pandas UDF, one O(tokens) pass per sentence.
+* pages ``(url, html[, lang])`` — the production path:
+  ``extract_article_text`` → ``iter_raw_sentences`` → raw-text filler
+  probes → ``tokens_of_normalized``;
+* sentences ``(url, sent_id, rel_pos, sentence[, anchors])`` — sentence
+  rows as ``explode_sentences`` emits them, tokenized with exactly
+  ``tokenize(sentence)``; the probes are skipped, because their exactness
+  proof assumes page-mode normalization.
 
-Both emit the same shape: one row per (sentence, mention) with the token
-span and the canonical entity.
+Per sentence it applies up to three matchers, each optional:
 
-Scale notes: the alias dictionary is broadcast once (a list of
-(alias, entity) pairs); the automaton is constructed lazily per executor
-process and cached in a module global keyed by broadcast id — NOT rebuilt
-per batch. At 10^12-document scale with ~10^7 aliases the broadcast is
-O(1 GB) — the documented fallback is a map-side join against a bucketed
-alias table for the long tail, keeping the automaton to the hot head.
+* a head automaton (``head_bc``): one Aho-Corasick automaton over a
+  broadcast (alias, entity) list — the full dictionary, or the hot head of
+  the map-side split — built once per executor;
+* anchors plus a redirect map (``redirect_map_bc``): reference-parity
+  tagging. The entities a sentence mentions are the targets of its
+  hyperlink anchors, located at token level (semantics of
+  tagged_sentence.py:17-64,78-83 TokenMatcher + the capitalize hotfix
+  :232-233) and resolved through the redirect dictionary at match time
+  (the reference rewrote the whole dump in a setup pass instead,
+  data_cleaning/redirects_substitutor.py:136-168);
+* the tail first-token/witness sets of the map-side split: ``cand`` marks
+  the token positions where a tail alias could start, for the relational
+  n-gram join (``_mapside_union``).
+
+It emits one row per sentence, ``(url, sent_id, rel_pos, tokens, hits,
+amentions, cand)``; with ``prune_empty`` a sentence with no hit, anchor
+mention or candidate is dropped before it crosses Arrow. Every entry point
+is a projection over it:
+
+* ``fused_sentence_hits_and_anchors`` — dictionary mode (pipeline);
+* ``fused_anchor_windows`` — anchors mode (pipeline): builds the nested
+  slot windows in Python inside the kernel's batch loop;
+* ``fused_anchor_mentions`` — anchor mention rows (streaming ingest);
+* ``detect_dictionary_mentions`` and
+  ``detect_dictionary_mentions_mapside_sentences`` — the declared
+  dictionary queries, composed as the pipeline composes them: one persist
+  of the pruned kernel output, then ``hot_hits`` or ``_mapside_union``.
+
+Scale notes: the full alias dictionary is broadcast only under the
+``broadcast`` strategy; at 10^7 aliases the map-side split keeps the
+automaton to a bounded hot head and joins the long tail relationally.
 """
 
 from __future__ import annotations
@@ -36,20 +60,43 @@ from pyspark.sql.types import (
     ArrayType, DoubleType, IntegerType, StringType, StructField, StructType,
 )
 
+from fact_extraction_spark.caches import track
 from fact_extraction_spark.functions.uri import capitalize_first, strip_name
 from fact_extraction_spark.textops.aho import TokenAhoCorasick
 from fact_extraction_spark.textops.tokenizer import tokenize
 
-MENTION_SCHEMA = ArrayType(StructType([
-    StructField("start", IntegerType()),
-    StructField("end", IntegerType()),
-    StructField("entity", StringType()),
-]))
+_SPAN_FIELDS = [StructField("start", IntegerType()),
+                StructField("end", IntegerType())]
 
-TOKENS_AND_MENTIONS_SCHEMA = StructType([
+# the kernel's one output schema, after ``url`` and any pass-through columns
+KERNEL_FIELDS = [
+    StructField("sent_id", IntegerType()),
+    StructField("rel_pos", DoubleType()),
     StructField("tokens", ArrayType(StringType())),
-    StructField("mentions", MENTION_SCHEMA),
-])
+    StructField("hits", ArrayType(StructType([
+        *_SPAN_FIELDS,
+        StructField("alias", StringType()),
+        StructField("entity", StringType()),
+    ]))),
+    StructField("amentions", ArrayType(StructType([
+        *_SPAN_FIELDS,
+        StructField("entity", StringType()),
+    ]))),
+    StructField("cand", ArrayType(IntegerType())),
+]
+
+# fused_anchor_windows' projection, after ``url``
+WINDOW_FIELDS = [
+    StructField("sent_id", IntegerType()),
+    StructField("rel_pos", DoubleType()),
+    StructField("subject", StringType()),
+    StructField("object", StringType()),
+    StructField("n_slots", IntegerType()),
+    StructField("slots", ArrayType(StructType([
+        StructField("slot", IntegerType()),
+        StructField("word", StringType()),
+    ]))),
+]
 
 # per-executor automaton cache (see _cached_by_identity / _automaton_for)
 _AC_CACHE: dict = {}
@@ -318,10 +365,6 @@ def _scan_skip_set(ac: TokenAhoCorasick, ft: frozenset | None) -> frozenset:
         lambda: ac.start_tokens if ft is None else (ac.start_tokens | ft))
 
 
-def _display_text(title: str) -> str:
-    return title.replace("_", " ")
-
-
 def _capitalize(name: str) -> str:
     return name[:1].upper() + name[1:] if name else name
 
@@ -419,8 +462,22 @@ def collect_alias_broadcast(spark: SparkSession, alias_table: DataFrame):
     return spark.sparkContext.broadcast(pairs)
 
 
+def collect_redirect_map(spark: SparkSession, redirects: DataFrame):
+    """Broadcast {alias → final target} (underscore form, capitalized).
+
+    When two aliases collapse to the same capitalized form with different
+    targets, the smallest target wins, so the map is deterministic."""
+    resolved = resolve_redirects(redirects)
+    mapping: dict[str, str] = {}
+    for r in resolved.collect():
+        alias, target = _capitalize(r["alias"]), _capitalize(r["target"])
+        if alias not in mapping or target < mapping[alias]:
+            mapping[alias] = target
+    return spark.sparkContext.broadcast(mapping)
+
+
 # --------------------------------------------------------------------------
-# anchor-based tagging (reference parity)
+# anchor tagging (reference parity)
 # --------------------------------------------------------------------------
 
 def _anchor_pairs(anchors):
@@ -454,25 +511,15 @@ def _build_anchor_ac(anchors, redirect_map) -> TokenAhoCorasick:
     return ac
 
 
-def _find_anchor_spans(tokens: list[str], anchors, redirect_map) -> list[tuple]:
-    """Token spans of each anchor text; entity = redirect-resolved target.
-
-    Equivalent to running TokenMatcher per link (tagged_sentence.py:78-83)
-    but via one tiny per-sentence automaton over this sentence's anchors.
-    """
-    return [(s, e, ent)
-            for s, e, ent in _build_anchor_ac(anchors, redirect_map).find(tokens)]
-
-
 def _paragraph_anchor_spans():
     """Anchor-span finder with the per-PARAGRAPH mini automaton cached by
-    IDENTITY of the anchors list (extract_sentences / iter_raw_sentences
-    share one list object across a paragraph's sentences): a paragraph with
-    k sentences builds its automaton once instead of k times, and the
-    start_tokens disjoint check (the same invariant the dictionary fast
-    path rests on, property-pinned) skips the find() walk on sentences
-    containing none of the paragraph's anchor texts. One closure per UDF
-    call — the identity key can never outlive the page batch."""
+    IDENTITY of the anchors list (iter_raw_sentences shares one list
+    object across a paragraph's sentences): a paragraph with k sentences
+    builds its automaton once instead of k times, and the start_tokens
+    disjoint check (the same invariant the dictionary fast path rests on,
+    property-pinned) skips the find() walk on sentences containing none of
+    the paragraph's anchor texts. The cached entry pins its anchors list,
+    so the identity check can never match a recycled object."""
     state: list = [None, None]
 
     def find(tokens, anchors, redirect_map):
@@ -488,187 +535,249 @@ def _paragraph_anchor_spans():
     return find
 
 
-def tag_anchor_mentions(sentences: DataFrame, redirect_map_bc,
-                        keep_cols: tuple = ()) -> DataFrame:
-    """sentences(url, sent_id, rel_pos, sentence, anchors) → mention rows.
+# --------------------------------------------------------------------------
+# the scan kernel
+# --------------------------------------------------------------------------
 
-    Output: (url, sent_id, rel_pos, tokens, start, end, entity) plus any
-    ``keep_cols`` passed through.
-    ``redirect_map_bc``: broadcast dict alias→final target (underscore form).
+def _kernel_batches(page_mode: bool, columns: list[str], n_keep: int,
+                    project, head_bc, redirect_map_bc, first_tok_bc,
+                    witness_bc, no_tail: bool, include_unanchored: bool,
+                    prune_empty: bool):
+    """The mapInPandas function of ``scan_kernel``: per task, set up the
+    matchers once, then run the sentence loop over every Arrow batch and
+    emit ``columns`` (url, the ``n_keep`` pass-through columns, then the
+    kernel's or the projection's fields)."""
+    from fact_extraction_spark.textops.wikitext import (
+        extract_article_text, iter_raw_sentences, tokens_of_normalized)
+
+    def run(batches):
+        ac = _automaton_for(head_bc) if head_bc is not None else None
+        rmap = redirect_map_bc.value if redirect_map_bc is not None else None
+        ft = first_tok_bc.value if first_tok_bc is not None else None
+        wt = witness_bc.value if witness_bc is not None else None
+        # the witness gate is exact only when the tail is covered by a
+        # witness set (or absent); otherwise cand positions must survive
+        # for the tail join — see _scan_gate_set / _scan_tokens
+        gate_on = no_tail or wt is not None
+        skip = gate = probe = None
+        if ac is not None:
+            skip = _scan_skip_set(ac, ft)
+            gate = _scan_gate_set(ac, wt) if gate_on else None
+            if page_mode and prune_empty:
+                probe = _gate_probe(ac, wt) if gate_on else _skip_probe(ac, ft)
+        # adaptive probes: the raw-text regex skips normalize+tokenize for
+        # inert filler (and, at paragraph level, the whole sentence split —
+        # see _make_paragraph_skip), but on entity-dense text it is pure
+        # overhead, so each level stops probing for the rest of the task
+        # once its sample shows the skip rate under the ~1/4 breakeven
+        # (measured: probe 25 MB/s vs tokenize 7 MB/s per core). Output is
+        # invariant either way.
+        bstate = {"probe": probe, "pprobe": probe,
+                  "n": 0, "m": 0, "pn": 0, "pm": 0}
+        skip_para = _make_paragraph_skip(bstate)
+        find_spans = _paragraph_anchor_spans()
+
+        def page_sentences(pdf):
+            for i, raw_html in enumerate(pdf["html"]):
+                text = extract_article_text(
+                    (bytes(raw_html) if raw_html is not None else b"").decode(
+                        "utf-8", errors="replace"))
+                for sent_id, rel_pos, raw, anchors in iter_raw_sentences(
+                        text, include_unanchored=include_unanchored,
+                        skip_paragraph=skip_para):
+                    p = bstate["probe"]
+                    if p is not None and not anchors:
+                        bstate["n"] += 1
+                        if p.search(_probe_text(raw)) is None:
+                            # filler fast path: no token can start a match
+                            # and no anchor exists (sent_id still advances:
+                            # iter_raw_sentences assigns ids first)
+                            bstate["m"] += 1
+                            continue
+                        if (bstate["n"] >= 1024
+                                and bstate["m"] * 4 < bstate["n"]):
+                            bstate["probe"] = None
+                    yield (i, sent_id, rel_pos, tokens_of_normalized(raw),
+                           anchors)
+
+        def given_sentences(pdf):
+            anchors = (pdf["anchors"] if "anchors" in pdf.columns
+                       else [None] * len(pdf))
+            for i, (sent_id, rel_pos, sent, anch) in enumerate(zip(
+                    pdf["sent_id"], pdf["rel_pos"], pdf["sentence"], anchors)):
+                yield (i, sent_id, rel_pos, tokenize(sent or ""),
+                       _anchor_pairs(anch))
+
+        sentences = page_sentences if page_mode else given_sentences
+        for pdf in batches:
+            heads = list(zip(*(pdf[c].tolist()
+                               for c in pdf.columns[:1 + n_keep])))
+            rows = []
+            for i, sent_id, rel_pos, tokens, anchors in sentences(pdf):
+                hits, cand = (_scan_tokens(tokens, ac, skip, ft, gate)
+                              if ac is not None else ([], []))
+                aspans = (find_spans(tokens, anchors, rmap)
+                          if rmap is not None else [])
+                if prune_empty and not hits and not aspans and not cand:
+                    continue
+                rec = (sent_id, rel_pos, tokens, hits, aspans, cand)
+                if project is None:
+                    rows.append(heads[i] + rec)
+                else:
+                    rows.extend(heads[i] + out
+                                for out in project(heads[i][0], *rec))
+            # never yield an all-empty batch: pandas infers float64 for
+            # empty columns, which Arrow cannot cast to list<struct>
+            if rows:
+                yield pd.DataFrame.from_records(rows, columns=columns)
+    return run
+
+
+def scan_kernel(df: DataFrame, head_bc=None, redirect_map_bc=None,
+                first_tok_bc=None, witness_bc=None, no_tail: bool = False,
+                include_unanchored: bool = False, prune_empty: bool = False,
+                lang: str | None = None, keep_cols: tuple = (),
+                project=None, project_fields=None) -> DataFrame:
+    """The mention-scan kernel: one row per sentence,
+    ``(url, *keep_cols, sent_id, rel_pos, tokens, hits, amentions, cand)``.
+
+    ``df`` is either pages ``(url, html[, lang])`` or sentence rows
+    ``(url, sent_id, rel_pos, sentence[, anchors])`` (the input mode is the
+    presence of a ``sentence`` column). ``lang`` filters pages on their
+    ``lang`` column; ``include_unanchored`` lifts the reference-parity
+    keeps-a-link sentence filter of page input.
+
+    Matchers, each optional: ``head_bc`` (broadcast (alias, entity) list →
+    ``hits``), ``redirect_map_bc`` (anchor spans resolved through the
+    redirect map → ``amentions``) and ``first_tok_bc``/``witness_bc`` (the
+    map-side tail's first-token and witness sets → ``cand``, see
+    collect_tail_broadcasts). ``no_tail`` says the head is the whole
+    dictionary, which turns the witness gate on without a tail witness set.
+
+    ``prune_empty`` drops sentences with no hit, anchor mention and
+    candidate inside the loop: on web-shaped pages the filler majority,
+    whose tokens then never cross Arrow, never persist and never explode.
+    Only safe when every consumer filters on one of the three and the tail
+    is covered: ``first_tok_bc`` is set, or no tail path will run. On page
+    input it also turns on the raw-text probes that skip tokenizing
+    sentences that cannot match.
+
+    ``project(url, sent_id, rel_pos, tokens, hits, amentions, cand)``, when
+    given, maps each kept sentence to zero or more rows with
+    ``project_fields`` in place of the kernel fields.
     """
-    @pandas_udf(TOKENS_AND_MENTIONS_SCHEMA)
-    def _tag(sentence: pd.Series, anchors: pd.Series) -> pd.DataFrame:
-        rmap = redirect_map_bc.value
-        toks_out, ments_out = [], []
-        for sent, anch in zip(sentence, anchors):
-            tokens = tokenize(sent or "")
-            spans = _find_anchor_spans(tokens, anch, rmap)
-            toks_out.append(tokens)
-            ments_out.append(spans)
-        return pd.DataFrame({"tokens": toks_out, "mentions": ments_out})
+    page_mode = "sentence" not in df.columns
+    if lang is not None:
+        df = df.filter(F.col("lang") == lang)
+    inputs = (["html"] if page_mode else
+              ["sent_id", "rel_pos", "sentence",
+               *(["anchors"] if "anchors" in df.columns
+                 and redirect_map_bc is not None else [])])
+    df = df.select("url", *keep_cols, *inputs)
+    schema = StructType([
+        StructField("url", StringType()),
+        *(df.schema[c] for c in keep_cols),
+        *(KERNEL_FIELDS if project is None else project_fields)])
+    return df.mapInPandas(
+        _kernel_batches(page_mode, schema.fieldNames(), len(keep_cols),
+                        project, head_bc, redirect_map_bc, first_tok_bc,
+                        witness_bc, no_tail, include_unanchored, prune_empty),
+        schema=schema)
 
-    # deterministic function, marked non-deterministic as an optimizer fence:
-    # the explode/filter over the UDF struct otherwise duplicates the
-    # ArrowEvalPython node (guide-documented pushdown copy), doubling the scan
-    _tag = _tag.asNondeterministic()
 
-    tagged = sentences.select(
-        "url", *keep_cols, "sent_id", "rel_pos",
-        _tag(F.col("sentence"), F.col("anchors")).alias("tm"),
-    )
+def _filled(df: DataFrame) -> DataFrame:
+    """Persist ``df`` and fill it with one eager count: its rows feed
+    several independent subtrees of the downstream action (hot hits,
+    candidate positions, the tail join-back, anchor-mention profiles), and
+    independent stages of one job run concurrently — each that reaches an
+    unfilled cache partition would recompute the whole corpus scan."""
+    df = track(df.persist())
+    df.count()
+    return df
+
+
+def _explode_spans(sent: DataFrame, field: str, keep_cols: tuple = (),
+                   alias: bool = False) -> DataFrame:
+    """One mention row per span in ``sent.<field>``."""
+    base = ["url", *keep_cols, "sent_id", "rel_pos", "tokens"]
     return (
-        tagged.select(
-            "url", *keep_cols, "sent_id", "rel_pos",
-            F.col("tm.tokens").alias("tokens"),
-            F.explode(F.col("tm.mentions")).alias("m"),
-        )
-        .select(
-            "url", *keep_cols, "sent_id", "rel_pos", "tokens",
-            F.col("m.start").alias("start"),
-            F.col("m.end").alias("end"),
-            F.col("m.entity").alias("entity"),
-        )
+        sent.filter(F.size(field) > 0)
+        .select(*base, F.explode(field).alias("m"))
+        .select(*base,
+                F.col("m.start").alias("start"),
+                F.col("m.end").alias("end"),
+                *([F.col("m.alias").alias("alias")] if alias else []),
+                F.col("m.entity").alias("entity"))
     )
 
 
-FUSED_MENTIONS_SCHEMA = ArrayType(StructType([
-    StructField("sent_id", IntegerType()),
-    StructField("rel_pos", DoubleType()),
-    StructField("tokens", ArrayType(StringType())),
-    StructField("mentions", MENTION_SCHEMA),
-]))
+def hot_hits(sent: DataFrame) -> DataFrame:
+    """Explode the automaton hits of sentence rows into mention rows
+    (url, sent_id, rel_pos, tokens, start, end, alias, entity)."""
+    return _explode_spans(sent, "hits", alias=True)
+
+
+def anchor_mention_rows(sent: DataFrame) -> DataFrame:
+    """Explode the anchor spans of sentence rows into mention rows
+    (the trusted-mention shape build_entity_profiles consumes)."""
+    return _explode_spans(sent, "amentions")
+
+
+def fused_sentence_hits_and_anchors(pages: DataFrame, head_bc,
+                                    redirect_map_bc,
+                                    lang: str | None = "en",
+                                    include_unanchored: bool = False,
+                                    first_tok_bc=None,
+                                    prune_empty: bool = False,
+                                    witness_bc=None,
+                                    no_tail: bool = False) -> DataFrame:
+    """Dictionary mode: ONE corpus pass emitting both the automaton hits
+    (stage 2a candidates) and the redirect-resolved anchor mentions (the
+    profiles of the stage-2b tf-idf ranking) per sentence — the kernel
+    over pages with the head automaton and the redirect map."""
+    return scan_kernel(pages, head_bc=head_bc,
+                       redirect_map_bc=redirect_map_bc,
+                       first_tok_bc=first_tok_bc, witness_bc=witness_bc,
+                       no_tail=no_tail,
+                       include_unanchored=include_unanchored,
+                       prune_empty=prune_empty, lang=lang)
 
 
 def fused_anchor_mentions(pages: DataFrame, redirect_map_bc,
                           lang: str | None = "en",
                           keep_cols: tuple = ()) -> DataFrame:
-    """pages(html) → mention rows in ONE Arrow UDF node.
-
-    Functionally identical to ``extract_text → explode_sentences →
-    tag_anchor_mentions`` (the same frozen pure functions run in the same
-    order), but the whole Python chain executes in a single python worker
-    per task instead of three chained ArrowEvalPython stages. Three chained
-    pandas UDFs each get their own PythonRunner → 3× the python processes
-    and 2 extra JVM↔Python Arrow round-trips of the full text; fusing is
-    what makes the stage scale with cores (measured 6-10× at local[32]).
-    """
-    from fact_extraction_spark.textops.wikitext import (
-        extract_article_text, extract_sentences)
-
-    @pandas_udf(FUSED_MENTIONS_SCHEMA)
-    def _fused(html: pd.Series) -> pd.Series:
-        rmap = redirect_map_bc.value
-        find_spans = _paragraph_anchor_spans()
-
-        def _page(b) -> list:
-            text = extract_article_text(
-                (bytes(b) if b is not None else b"").decode(
-                    "utf-8", errors="replace"))
-            out = []
-            for sent_id, r in enumerate(extract_sentences(text)):
-                tokens = tokenize(r["sentence"] or "")
-                spans = find_spans(tokens, r["anchors"], rmap)
-                if spans:
-                    out.append((sent_id, r["rel_pos"], tokens, spans))
-            return out
-
-        return html.map(_page)
-
-    # pure function; non-determinism marking is an optimizer fence so the
-    # explode/filter over the UDF output cannot duplicate the
-    # ArrowEvalPython node (guide-documented filter-pushdown copy that
-    # doubled the whole scan per plan branch)
-    _fused = _fused.asNondeterministic()
-
-    df = pages
-    if lang is not None:
-        df = df.filter(F.col("lang") == lang)
-    tagged = df.select("url", *keep_cols, _fused(F.col("html")).alias("ss"))
-    return (
-        tagged.select("url", *keep_cols, F.explode("ss").alias("s"))
-        .select(
-            "url", *keep_cols,
-            F.col("s.sent_id").alias("sent_id"),
-            F.col("s.rel_pos").alias("rel_pos"),
-            F.col("s.tokens").alias("tokens"),
-            F.explode(F.col("s.mentions")).alias("m"),
-        )
-        .select(
-            "url", *keep_cols, "sent_id", "rel_pos", "tokens",
-            F.col("m.start").alias("start"),
-            F.col("m.end").alias("end"),
-            F.col("m.entity").alias("entity"),
-        )
-    )
+    """pages(html) → anchor mention rows (url, *keep_cols, sent_id,
+    rel_pos, tokens, start, end, entity)."""
+    sent = scan_kernel(pages, redirect_map_bc=redirect_map_bc,
+                       prune_empty=True, lang=lang, keep_cols=keep_cols)
+    return _explode_spans(sent, "amentions", keep_cols)
 
 
-# --------------------------------------------------------------------------
-# dictionary-based detection (north star: per-executor Aho-Corasick)
-# --------------------------------------------------------------------------
+def _window_projection(window: int, max_sentence_tokens: int,
+                       drop_redlinks: bool):
+    offsets = [o for o in range(-window, window + 1) if o != 0]
 
-def detect_dictionary_mentions(sentences: DataFrame, alias_bc) -> DataFrame:
-    """Scan every sentence against the full broadcast alias dictionary.
-
-    Output: (url, sent_id, rel_pos, tokens, start, end, alias, entity).
-    The automaton is built once per executor process (module-global cache
-    keyed by the broadcast payload id) — the north-star requirement.
-    """
-    schema = ArrayType(StructType([
-        StructField("start", IntegerType()),
-        StructField("end", IntegerType()),
-        StructField("alias", StringType()),
-        StructField("entity", StringType()),
-    ]))
-
-    @pandas_udf(StructType([
-        StructField("tokens", ArrayType(StringType())),
-        StructField("mentions", schema),
-    ]))
-    def _scan(sentence: pd.Series) -> pd.DataFrame:
-        ac = _automaton_for(alias_bc)
-        skip = _scan_skip_set(ac, None)
-        gate = _scan_gate_set(ac, None)
-        toks_out, ments_out = [], []
-        for sent in sentence:
-            tokens = tokenize(sent or "")
-            hits, _ = _scan_tokens(tokens, ac, skip, None, gate)
-            toks_out.append(tokens)
-            ments_out.append(hits)
-        return pd.DataFrame({"tokens": toks_out, "mentions": ments_out})
-
-    # pure function; non-determinism marking is an optimizer fence so the
-    # explode/filter over the UDF output cannot duplicate the
-    # ArrowEvalPython node (guide-documented filter-pushdown copy that
-    # doubled the whole scan per plan branch)
-    _scan = _scan.asNondeterministic()
-
-    scanned = sentences.select(
-        "url", "sent_id", "rel_pos", _scan(F.col("sentence")).alias("tm"))
-    return (
-        scanned.select(
-            "url", "sent_id", "rel_pos",
-            F.col("tm.tokens").alias("tokens"),
-            F.explode(F.col("tm.mentions")).alias("m"),
-        )
-        .select(
-            "url", "sent_id", "rel_pos", "tokens",
-            F.col("m.start").alias("start"),
-            F.col("m.end").alias("end"),
-            F.col("m.alias").alias("alias"),
-            F.col("m.entity").alias("entity"),
-        )
-    )
-
-
-WINDOW_ROWS_DDL = ("url string, sent_id int, rel_pos double, "
-                   "subject string, object string, n_slots int, "
-                   "slots array<struct<slot: int, word: string>>")
-
-# unresolved-span variant (redirect_strategy="join"): raw href entity plus
-# the span, so resolution/dedup can happen relationally downstream
-SPAN_ROWS_DDL = ("url string, sent_id int, rel_pos double, "
-                 "subject string, raw_entity string, start int, end int, "
-                 "n_slots int, slots array<struct<slot: int, word: string>>")
+    def project(url, sent_id, rel_pos, tokens, hits, aspans, cand):
+        n_tok = len(tokens)
+        if n_tok > max_sentence_tokens:
+            return
+        title = _capitalize(url.split("/")[-1])
+        first = {}
+        for s, e, ent in sorted(aspans):
+            if ent not in first:
+                first[ent] = (s, e)
+        for ent, (s, e) in first.items():
+            if ent == title:
+                continue  # self-link drop (res != entity)
+            if drop_redlinks and "redlink=1" in ent:
+                continue
+            slot_words = []
+            for o in offsets:
+                pos = s + o if o < 0 else e + o
+                if 0 <= pos < n_tok:
+                    slot_words.append((o, tokens[pos]))
+            yield (sent_id, rel_pos, title, ent, len(slot_words), slot_words)
+    return project
 
 
 def fused_anchor_windows(pages: DataFrame, redirect_map_bc,
@@ -676,282 +785,65 @@ def fused_anchor_windows(pages: DataFrame, redirect_map_bc,
                          window: int = 4,
                          max_sentence_tokens: int = 50,
                          drop_redlinks: bool = False) -> DataFrame:
-    """pages(html) → ONE candidate row per mention in one mapInPandas pass.
+    """Anchors mode: pages(html) → ONE candidate row per mention, built in
+    Python inside the kernel's batch loop.
 
-    Fuses ``fused_anchor_mentions`` + ``lexical_patterns.candidate_windows``:
-    per page (pure Python, trivially cheap — ~0.14 ms/page), it extracts
-    text, splits sentences, tags anchors, picks the first span per
-    (sentence, entity), applies the 50-token cap and self-link filter, and
-    emits one row per candidate with the slot words NESTED
-    (``slots: array<struct<slot, word>>``).
+    Semantics of ``fused_anchor_mentions`` + the self-link filter +
+    ``lexical_patterns.candidate_windows`` (equivalence-tested): the first
+    span per (sentence, entity), the 50-token cap, ``subject`` the page
+    title (capitalize hotfix), slots -window..window excluding 0.
 
-    Why nested: the corpus-wide cost is memory bandwidth, not the per-page
-    Python. A flat row per (mention, slot word) repeats the url / subject /
-    object strings ~2·window times per candidate — measured as ~1.3×
-    task-time inflation at high core counts on the Arrow transfer, the
-    persist and every downstream shuffle. One nested row per candidate is
-    also unique BY CONSTRUCTION, so the scorer's candidate table needs no
-    corpus-wide distinct.
-
-    Semantics are candidate_windows' exactly (equivalence-tested);
-    ``subject`` is the page title (capitalize hotfix), slots are
-    -window..window excluding 0.
+    Why nested (``slots: array<struct<slot, word>>``): the corpus-wide cost
+    is memory bandwidth, not the per-page Python. A flat row per (mention,
+    slot word) repeats the url / subject / object strings ~2·window times
+    per candidate — measured as ~1.3× task-time inflation at high core
+    counts on the Arrow transfer, the persist and every downstream shuffle.
+    One nested row per candidate is also unique BY CONSTRUCTION, so the
+    scorer's candidate table needs no corpus-wide distinct, and building
+    it here needs no window-function shuffle.
     """
-    from fact_extraction_spark.textops.wikitext import (
-        extract_article_text, extract_sentences)
-
-    offsets = [o for o in range(-window, window + 1) if o != 0]
-
-    def _batches(it):
-        rmap = redirect_map_bc.value
-        find_spans = _paragraph_anchor_spans()
-        for pdf in it:
-            out = {k: [] for k in ("url", "sent_id", "rel_pos", "subject",
-                                   "object", "n_slots", "slots")}
-            for url, raw in zip(pdf["url"], pdf["html"]):
-                title = _capitalize(url.split("/")[-1])
-                text = extract_article_text(
-                    (bytes(raw) if raw is not None else b"").decode(
-                        "utf-8", errors="replace"))
-                for sent_id, r in enumerate(extract_sentences(text)):
-                    tokens = tokenize(r["sentence"] or "")
-                    n_tok = len(tokens)
-                    if n_tok > max_sentence_tokens:
-                        continue
-                    spans = find_spans(tokens, r["anchors"], rmap)
-                    first = {}
-                    for s, e, ent in sorted(spans):
-                        if ent not in first:
-                            first[ent] = (s, e)
-                    for ent, (s, e) in first.items():
-                        if ent == title:
-                            continue  # self-link drop (res != entity)
-                        if drop_redlinks and "redlink=1" in ent:
-                            continue
-                        slot_words = []
-                        for o in offsets:
-                            pos = s + o if o < 0 else e + o
-                            if 0 <= pos < n_tok:
-                                slot_words.append((o, tokens[pos]))
-                        out["url"].append(url)
-                        out["sent_id"].append(sent_id)
-                        out["rel_pos"].append(r["rel_pos"])
-                        out["subject"].append(title)
-                        out["object"].append(ent)
-                        out["n_slots"].append(len(slot_words))
-                        out["slots"].append(slot_words)
-            # an all-empty batch must NOT be yielded: pandas infers float64
-            # for empty columns and Arrow cannot cast empty float64 to
-            # list<struct> (fires whenever a partition produces no
-            # candidates — guaranteed at scale)
-            if out["url"]:
-                yield pd.DataFrame(out)
-
-    df = pages
-    if lang is not None:
-        df = df.filter(F.col("lang") == lang)
-    return df.select("url", "html").mapInPandas(_batches,
-                                                schema=WINDOW_ROWS_DDL)
+    return scan_kernel(
+        pages, redirect_map_bc=redirect_map_bc, prune_empty=True, lang=lang,
+        project=_window_projection(window, max_sentence_tokens,
+                                   drop_redlinks),
+        project_fields=WINDOW_FIELDS)
 
 
-def fused_anchor_spans(pages: DataFrame,
-                       lang: str | None = "en",
-                       window: int = 4,
-                       max_sentence_tokens: int = 50,
-                       drop_redlinks: bool = False) -> DataFrame:
-    """pages(html) → UNRESOLVED candidate spans (redirect_strategy="join").
+def detect_dictionary_mentions(sentences: DataFrame, alias_bc) -> DataFrame:
+    """Scan sentence rows against the full broadcast alias dictionary.
 
-    Same single-pass extraction as ``fused_anchor_windows`` but with no
-    redirect dictionary in the UDF at all: entities are the raw href
-    targets (capitalize hotfix applied) and each row carries its token
-    span, so redirect resolution, first-span dedup and the self-link drop
-    happen relationally downstream (``anchor_windows_relational``). This is
-    the zero-driver-state path: nothing is collected to the driver, and
-    Catalyst picks broadcast vs shuffle for the resolution join by the
-    redirect table's actual size.
-    """
-    from fact_extraction_spark.textops.wikitext import (
-        extract_article_text, extract_sentences)
-
-    offsets = [o for o in range(-window, window + 1) if o != 0]
-
-    def _batches(it):
-        find_spans = _paragraph_anchor_spans()
-        for pdf in it:
-            out = {k: [] for k in ("url", "sent_id", "rel_pos", "subject",
-                                   "raw_entity", "start", "end", "n_slots",
-                                   "slots")}
-            for url, raw in zip(pdf["url"], pdf["html"]):
-                title = _capitalize(url.split("/")[-1])
-                text = extract_article_text(
-                    (bytes(raw) if raw is not None else b"").decode(
-                        "utf-8", errors="replace"))
-                for sent_id, r in enumerate(extract_sentences(text)):
-                    tokens = tokenize(r["sentence"] or "")
-                    n_tok = len(tokens)
-                    if n_tok > max_sentence_tokens:
-                        continue
-                    spans = find_spans(tokens, r["anchors"],
-                                       {})  # no resolution here
-                    first = {}
-                    for s, e, ent in sorted(spans):
-                        if ent not in first:
-                            first[ent] = (s, e)
-                    for ent, (s, e) in first.items():
-                        if drop_redlinks and "redlink=1" in ent:
-                            continue
-                        slot_words = []
-                        for o in offsets:
-                            pos = s + o if o < 0 else e + o
-                            if 0 <= pos < n_tok:
-                                slot_words.append((o, tokens[pos]))
-                        out["url"].append(url)
-                        out["sent_id"].append(sent_id)
-                        out["rel_pos"].append(r["rel_pos"])
-                        out["subject"].append(title)
-                        out["raw_entity"].append(ent)
-                        out["start"].append(s)
-                        out["end"].append(e)
-                        out["n_slots"].append(len(slot_words))
-                        out["slots"].append(slot_words)
-            # see fused_anchor_windows: never yield an all-empty batch
-            # (empty float64 columns cannot cast to list<struct>)
-            if out["url"]:
-                yield pd.DataFrame(out)
-
-    df = pages
-    if lang is not None:
-        df = df.filter(F.col("lang") == lang)
-    return df.select("url", "html").mapInPandas(_batches,
-                                                schema=SPAN_ROWS_DDL)
+    Output: (url, sent_id, rel_pos, tokens, start, end, alias, entity) —
+    the broadcast-strategy composition of the pipeline: one persist of the
+    pruned kernel output, then ``hot_hits``."""
+    sent = _filled(scan_kernel(sentences, head_bc=alias_bc, no_tail=True,
+                               prune_empty=True))
+    return hot_hits(sent)
 
 
-def anchor_windows_relational(pages: DataFrame, redirects: DataFrame,
-                              lang: str | None = "en",
-                              window: int = 4,
-                              max_sentence_tokens: int = 50,
-                              drop_redlinks: bool = False) -> DataFrame:
-    """``fused_anchor_windows`` semantics with redirect resolution as a
-    JOIN instead of a per-executor Python dict.
-
-    Steps: unresolved spans → left join the resolved redirect table on the
-    raw entity (object = coalesce(final_target, raw)) → first-span dedup
-    per (sentence, resolved entity) via min_by (two aliases resolving to
-    the same target keep the earliest span — identical to resolving before
-    the dedup) → self-link drop on the RESOLVED entity. One extra shuffle
-    keyed by the candidate; in exchange the driver never materializes the
-    redirect map and the join side scales past broadcast size (Catalyst
-    chooses broadcast vs shuffle by table size).
-
-    Row-identical to ``fused_anchor_windows`` (equivalence-tested).
-    """
-    spans = fused_anchor_spans(pages, lang=lang, window=window,
-                               max_sentence_tokens=max_sentence_tokens,
-                               drop_redlinks=drop_redlinks)
-    # Two redirect aliases can collapse to the same capitalize_first form
-    # with different targets; keep ONE deterministic target per capitalized
-    # alias (min) — the same rule collect_redirect_map applies — so this
-    # path stays row-identical to the broadcast path on case-variant
-    # aliases.
-    resolved = (
-        resolve_redirects(redirects)
-        .groupBy(capitalize_first("alias").alias("raw_entity"))
-        .agg(F.min(capitalize_first("target")).alias("_target")))
-    joined = (
-        spans.join(resolved, "raw_entity", "left")
-        .withColumn("object", F.coalesce("_target", "raw_entity"))
-        .drop("_target", "raw_entity")
-    )
-    deduped = (
-        joined.groupBy("url", "sent_id", "subject", "object")
-        .agg(F.min_by(
-            F.struct("rel_pos", "n_slots", "slots"),
-            F.struct("start", "end")).alias("w"))
-        .select("url", "sent_id",
-                F.col("w.rel_pos").alias("rel_pos"),
-                "subject", "object",
-                F.col("w.n_slots").alias("n_slots"),
-                F.col("w.slots").alias("slots"))
-    )
-    return (deduped.filter(F.col("object") != F.col("subject"))
-            .select("url", "sent_id", "rel_pos", "subject", "object",
-                    "n_slots", "slots"))
-
-
-def fused_dictionary_mentions(pages: DataFrame, alias_bc,
-                              lang: str | None = "en",
-                              keep_cols: tuple = ()) -> DataFrame:
-    """pages(html) → dictionary-candidate mention rows in ONE Arrow UDF node
-    (fused analogue of ``extract_text → explode_sentences →
-    detect_dictionary_mentions``; same per-executor automaton cache)."""
-    from fact_extraction_spark.textops.wikitext import (
-        extract_article_text, extract_sentences)
-
-    schema = ArrayType(StructType([
-        StructField("sent_id", IntegerType()),
-        StructField("rel_pos", DoubleType()),
-        StructField("tokens", ArrayType(StringType())),
-        StructField("mentions", ArrayType(StructType([
-            StructField("start", IntegerType()),
-            StructField("end", IntegerType()),
-            StructField("alias", StringType()),
-            StructField("entity", StringType()),
-        ]))),
-    ]))
-
-    @pandas_udf(schema)
-    def _fused(html: pd.Series) -> pd.Series:
-        ac = _automaton_for(alias_bc)
-        skip = _scan_skip_set(ac, None)
-        gate = _scan_gate_set(ac, None)
-
-        def _page(b) -> list:
-            text = extract_article_text(
-                (bytes(b) if b is not None else b"").decode(
-                    "utf-8", errors="replace"))
-            out = []
-            for sent_id, r in enumerate(extract_sentences(text)):
-                tokens = tokenize(r["sentence"] or "")
-                hits, _ = _scan_tokens(tokens, ac, skip, None, gate)
-                if hits:
-                    out.append((sent_id, r["rel_pos"], tokens, hits))
-            return out
-
-        return html.map(_page)
-
-    # pure function; non-determinism marking is an optimizer fence so the
-    # explode/filter over the UDF output cannot duplicate the
-    # ArrowEvalPython node (guide-documented filter-pushdown copy that
-    # doubled the whole scan per plan branch)
-    _fused = _fused.asNondeterministic()
-
-    df = pages
-    if lang is not None:
-        df = df.filter(F.col("lang") == lang)
-    tagged = df.select("url", *keep_cols, _fused(F.col("html")).alias("ss"))
-    return (
-        tagged.select("url", *keep_cols, F.explode("ss").alias("s"))
-        .select(
-            "url", *keep_cols,
-            F.col("s.sent_id").alias("sent_id"),
-            F.col("s.rel_pos").alias("rel_pos"),
-            F.col("s.tokens").alias("tokens"),
-            F.explode(F.col("s.mentions")).alias("m"),
-        )
-        .select(
-            "url", *keep_cols, "sent_id", "rel_pos", "tokens",
-            F.col("m.start").alias("start"),
-            F.col("m.end").alias("end"),
-            F.col("m.alias").alias("alias"),
-            F.col("m.entity").alias("entity"),
-        )
-    )
+def detect_dictionary_mentions_mapside_sentences(
+    sentences: DataFrame, head_bc, tail: DataFrame,
+    max_tail_tokens: int = 6, max_first_tokens: int = 2_000_000,
+) -> DataFrame:
+    """Map-side dictionary detection over sentence rows: hot-head
+    automaton hits ∪ relational n-gram tail join, composed as the
+    pipeline's mapside strategy composes them. Candidate tail positions
+    are marked in the scan, and empty sentences pruned, whenever the tail's
+    first-token set fits ``max_first_tokens`` (see
+    collect_first_token_broadcast); above it every sentence is kept and the
+    tail join posexplodes all tokens."""
+    ft_bc, wit_bc, tail_empty = collect_tail_broadcasts(tail,
+                                                         max_first_tokens)
+    sent = _filled(scan_kernel(sentences, head_bc=head_bc,
+                               first_tok_bc=ft_bc, witness_bc=wit_bc,
+                               prune_empty=ft_bc is not None))
+    return _mapside_union(sent, tail, max_tail_tokens,
+                          use_cand=ft_bc is not None, tail_empty=tail_empty)
 
 
 # --------------------------------------------------------------------------
-# map-side dictionary detection (the documented scale fallback: bounded
-# hot-head automaton + relational n-gram join for the long tail — the full
-# alias dictionary is never collected to the driver)
+# map-side dictionary detection (the scale strategy: bounded hot-head
+# automaton + relational n-gram join for the long tail — the full alias
+# dictionary is never collected to the driver)
 # --------------------------------------------------------------------------
 
 ALIAS_KEY_SCHEMA = StructType([
@@ -1010,20 +902,6 @@ def split_alias_dictionary(aliases: DataFrame, hot_k: int = 100_000,
     return head, tail
 
 
-SENTENCE_HITS_SCHEMA = ArrayType(StructType([
-    StructField("sent_id", IntegerType()),
-    StructField("rel_pos", DoubleType()),
-    StructField("tokens", ArrayType(StringType())),
-    StructField("hits", ArrayType(StructType([
-        StructField("start", IntegerType()),
-        StructField("end", IntegerType()),
-        StructField("alias", StringType()),
-        StructField("entity", StringType()),
-    ]))),
-    StructField("cand", ArrayType(IntegerType())),
-]))
-
-
 def collect_first_token_broadcast(tail: DataFrame,
                                   max_rows: int = 2_000_000):
     """Broadcast the DISTINCT first tokens of the tail alias keys as a
@@ -1035,7 +913,7 @@ def collect_first_token_broadcast(tail: DataFrame,
     share first tokens: every "John …" person collapses to one entry) and
     the n-gram tail join already drives this exact set through an
     ``F.broadcast`` semi-join — i.e. Spark already collects it to the
-    driver. Handing the same set to the fused sentence UDF instead lets
+    driver. Handing the same set to the scan kernel instead lets
     candidate tail positions be computed IN the scan pass, so sentences
     with no head hit, no anchor and no possible tail start are dropped
     before they cross Arrow, and the survivors explode only their
@@ -1100,354 +978,6 @@ def collect_tail_broadcasts(tail: DataFrame, max_rows: int = 2_000_000):
             collect_tail_witness_broadcast(tail, max_rows), False)
 
 
-def fused_sentence_hits(pages: DataFrame, head_bc,
-                        lang: str | None = "en",
-                        include_unanchored: bool = False,
-                        first_tok_bc=None,
-                        prune_empty: bool = False,
-                        witness_bc=None,
-                        no_tail: bool = False) -> DataFrame:
-    """pages(html) → one row per sentence: (url, sent_id, rel_pos, tokens,
-    hits, cand) where ``hits`` are the hot-head automaton matches and
-    ``cand`` the token positions where a tail alias could start (empty
-    unless ``first_tok_bc`` — see collect_first_token_broadcast — is
-    given). ``include_unanchored`` lifts the reference-parity keeps-a-link
-    sentence filter for anchor-free web text. With ``prune_empty``,
-    sentences with no hit and no candidate position are dropped INSIDE the
-    UDF — on web-shaped pages the overwhelming filler majority, whose
-    tokens then never cross Arrow, never persist and never explode. Only
-    prune when the tail is covered: either ``first_tok_bc`` is set or the
-    dictionary has no tail at all. Same per-executor automaton cache as
-    the broadcast path, but the broadcast payload is the bounded head, not
-    the full dictionary."""
-    from fact_extraction_spark.textops.wikitext import (
-        extract_article_text, iter_raw_sentences, tokens_of_normalized)
-
-    @pandas_udf(SENTENCE_HITS_SCHEMA)
-    def _fused(html: pd.Series) -> pd.Series:
-        ac = _automaton_for(head_bc)
-        ft = first_tok_bc.value if first_tok_bc is not None else None
-        wt = witness_bc.value if witness_bc is not None else None
-        skip = _scan_skip_set(ac, ft)
-        # the witness gate is exact only when the tail is covered by a
-        # witness set (or absent); otherwise suppress it — cand positions
-        # must survive for the tail join
-        gate_on = no_tail or wt is not None
-        gate = _scan_gate_set(ac, wt) if gate_on else None
-        # adaptive per-batch probes — see fused_sentence_hits_and_anchors
-        p = ((_gate_probe(ac, wt) if gate_on else _skip_probe(ac, ft))
-             if prune_empty else None)
-        bstate = {"probe": p, "pprobe": p, "n": 0, "m": 0, "pn": 0, "pm": 0}
-        skip_para = _make_paragraph_skip(bstate)
-
-        def _page(b) -> list:
-            text = extract_article_text(
-                (bytes(b) if b is not None else b"").decode(
-                    "utf-8", errors="replace"))
-            out = []
-            for sent_id, rel_pos, raw, anchors in iter_raw_sentences(
-                    text, include_unanchored=include_unanchored,
-                    skip_paragraph=skip_para):
-                probe = bstate["probe"]
-                if probe is not None and not anchors:
-                    bstate["n"] += 1
-                    if probe.search(_probe_text(raw)) is None:
-                        # filler fast path: skip normalize+tokenize
-                        bstate["m"] += 1
-                        continue
-                    if bstate["n"] >= 1024 and bstate["m"] * 4 < bstate["n"]:
-                        bstate["probe"] = None
-                tokens = tokens_of_normalized(raw)
-                hits, cand = _scan_tokens(tokens, ac, skip, ft, gate)
-                if prune_empty and not hits and not cand:
-                    continue
-                out.append((sent_id, rel_pos, tokens, hits, cand))
-            return out
-
-        return html.map(_page)
-
-    # pure function; non-determinism marking is an optimizer fence so the
-    # explode/filter over the UDF output cannot duplicate the
-    # ArrowEvalPython node (guide-documented filter-pushdown copy that
-    # doubled the whole scan per plan branch)
-    _fused = _fused.asNondeterministic()
-
-    df = pages
-    if lang is not None:
-        df = df.filter(F.col("lang") == lang)
-    return (
-        df.select("url", _fused(F.col("html")).alias("ss"))
-        .select("url", F.explode("ss").alias("s"))
-        .select(
-            "url",
-            F.col("s.sent_id").alias("sent_id"),
-            F.col("s.rel_pos").alias("rel_pos"),
-            F.col("s.tokens").alias("tokens"),
-            F.col("s.hits").alias("hits"),
-            F.col("s.cand").alias("cand"),
-        )
-    )
-
-
-def sentence_head_hits(sentences: DataFrame, head_bc,
-                       first_tok_bc=None, witness_bc=None,
-                       no_tail: bool = False) -> DataFrame:
-    """Sentence-level analogue of ``fused_sentence_hits`` for callers that
-    already hold sentence rows (url, sent_id, rel_pos, sentence): emits one
-    row per sentence with tokens + hot-head automaton hits (possibly
-    empty) + candidate tail positions when ``first_tok_bc`` is given. Same
-    per-executor automaton cache."""
-    @pandas_udf(StructType([
-        StructField("tokens", ArrayType(StringType())),
-        StructField("hits", ArrayType(StructType([
-            StructField("start", IntegerType()),
-            StructField("end", IntegerType()),
-            StructField("alias", StringType()),
-            StructField("entity", StringType()),
-        ]))),
-        StructField("cand", ArrayType(IntegerType())),
-    ]))
-    def _scan(sentence: pd.Series) -> pd.DataFrame:
-        ac = _automaton_for(head_bc)
-        ft = first_tok_bc.value if first_tok_bc is not None else None
-        wt = witness_bc.value if witness_bc is not None else None
-        skip = _scan_skip_set(ac, ft)
-        gate = (_scan_gate_set(ac, wt) if (no_tail or wt is not None)
-                else None)
-        toks_out, hits_out, cand_out = [], [], []
-        for sent in sentence:
-            tokens = tokenize(sent or "")
-            hits, cand = _scan_tokens(tokens, ac, skip, ft, gate)
-            hits_out.append(hits)
-            cand_out.append(cand)
-            toks_out.append(tokens)
-        return pd.DataFrame({"tokens": toks_out, "hits": hits_out,
-                             "cand": cand_out})
-
-    # pure function; non-determinism marking is an optimizer fence so the
-    # explode/filter over the UDF output cannot duplicate the
-    # ArrowEvalPython node (guide-documented filter-pushdown copy that
-    # doubled the whole scan per plan branch)
-    _scan = _scan.asNondeterministic()
-
-    return sentences.select(
-        "url", "sent_id", "rel_pos", _scan(F.col("sentence")).alias("th")) \
-        .select("url", "sent_id", "rel_pos",
-                F.col("th.tokens").alias("tokens"),
-                F.col("th.hits").alias("hits"),
-                F.col("th.cand").alias("cand"))
-
-
-def detect_dictionary_mentions_mapside_sentences(
-    sentences: DataFrame, head_bc, tail: DataFrame,
-    max_tail_tokens: int = 6, max_first_tokens: int = 2_000_000,
-) -> DataFrame:
-    """Map-side dictionary detection over pre-split sentence rows: hot-head
-    automaton hits ∪ relational n-gram tail join (same machinery as
-    ``detect_dictionary_mentions_mapside``, minus the page extraction).
-    Candidate tail positions are marked in the scan pass whenever the
-    tail's first-token set fits ``max_first_tokens`` (see
-    collect_first_token_broadcast), so only they explode downstream."""
-    from fact_extraction_spark.caches import track
-
-    ft_bc, wit_bc, tail_empty = collect_tail_broadcasts(tail,
-                                                         max_first_tokens)
-    # the scan output feeds THREE subtrees of the union (hot hits, candidate
-    # positions, the tail join-back); persist so the UDF pass over the
-    # corpus executes once instead of once per branch
-    sent = track(sentence_head_hits(sentences, head_bc, first_tok_bc=ft_bc,
-                                    witness_bc=wit_bc).persist())
-    sent.count()  # eager fill: branches of one action race an unfilled cache
-    return _mapside_union(sent, tail, max_tail_tokens,
-                          use_cand=ft_bc is not None, tail_empty=tail_empty)
-
-
-SENTENCE_HITS_ANCHORS_SCHEMA = ArrayType(StructType([
-    StructField("sent_id", IntegerType()),
-    StructField("rel_pos", DoubleType()),
-    StructField("tokens", ArrayType(StringType())),
-    StructField("hits", ArrayType(StructType([
-        StructField("start", IntegerType()),
-        StructField("end", IntegerType()),
-        StructField("alias", StringType()),
-        StructField("entity", StringType()),
-    ]))),
-    StructField("amentions", MENTION_SCHEMA),
-    StructField("cand", ArrayType(IntegerType())),
-]))
-
-
-def fused_sentence_hits_and_anchors(pages: DataFrame, head_bc,
-                                    redirect_map_bc,
-                                    lang: str | None = "en",
-                                    include_unanchored: bool = False,
-                                    first_tok_bc=None,
-                                    prune_empty: bool = False,
-                                    witness_bc=None,
-                                    no_tail: bool = False) -> DataFrame:
-    """ONE corpus pass emitting BOTH dictionary-automaton hits and
-    redirect-resolved anchor mentions per sentence.
-
-    The dictionary pipeline needs two mention views of the same pages —
-    AC-dictionary candidates (stage 2a) and trusted anchor tags (profile
-    building for the stage-2b tf-idf ranking). Running them as separate
-    fused UDFs costs two full html→sentences→tokens passes over the
-    corpus; this function pays the extraction exactly once. Output: one
-    row per sentence with (tokens, hits, amentions, cand) — ``cand`` is
-    the candidate tail-start positions when ``first_tok_bc`` (see
-    collect_first_token_broadcast) is given, else empty.
-
-    ``prune_empty`` drops sentences with no hit, no anchor mention and no
-    candidate position INSIDE the UDF: on web-shaped pages that is the
-    filler majority, whose tokens then never cross Arrow, never enter the
-    sentence persist and never reach the n-gram explode — the per-byte
-    cost of anchor-free corpora collapses to the Python cascade+automaton
-    scan. Only safe when every downstream consumer filters on one of the
-    three (hot_hits, anchor_mention_rows, the cand-driven tail join) AND
-    the tail is covered: pass it only with ``first_tok_bc`` set or when no
-    tail path will run (full-dictionary broadcast mode)."""
-    from fact_extraction_spark.textops.wikitext import (
-        extract_article_text, iter_raw_sentences, tokens_of_normalized)
-
-    @pandas_udf(SENTENCE_HITS_ANCHORS_SCHEMA)
-    def _fused(html: pd.Series) -> pd.Series:
-        ac = _automaton_for(head_bc)
-        rmap = redirect_map_bc.value
-        ft = first_tok_bc.value if first_tok_bc is not None else None
-        wt = witness_bc.value if witness_bc is not None else None
-        skip = _scan_skip_set(ac, ft)
-        # witness gate: exact only when the tail is covered by a witness
-        # set (or absent) — see _scan_gate_set / _scan_tokens
-        gate_on = no_tail or wt is not None
-        gate = _scan_gate_set(ac, wt) if gate_on else None
-        # adaptive per-batch probes: the raw-text regex skips
-        # normalize+tokenize for inert filler (and, at paragraph level, the
-        # whole sentence split — see _make_paragraph_skip), but on
-        # entity-dense text (most sentences naming SOME dictionary token)
-        # it is pure overhead — each level stops probing for the rest of
-        # the batch once its sample shows the skip rate under the ~1/4
-        # breakeven (measured: probe 25 MB/s vs tokenize 7 MB/s per core).
-        # Purely a performance device: output is invariant either way.
-        p = ((_gate_probe(ac, wt) if gate_on else _skip_probe(ac, ft))
-             if prune_empty else None)
-        bstate = {"probe": p, "pprobe": p, "n": 0, "m": 0, "pn": 0, "pm": 0}
-        skip_para = _make_paragraph_skip(bstate)
-        find_spans = _paragraph_anchor_spans()
-
-        def _page(b) -> list:
-            text = extract_article_text(
-                (bytes(b) if b is not None else b"").decode(
-                    "utf-8", errors="replace"))
-            out = []
-            for sent_id, rel_pos, raw, anchors in iter_raw_sentences(
-                    text, include_unanchored=include_unanchored,
-                    skip_paragraph=skip_para):
-                probe = bstate["probe"]
-                if probe is not None and not anchors:
-                    bstate["n"] += 1
-                    if probe.search(_probe_text(raw)) is None:
-                        # filler fast path: the regex scan of the RAW
-                        # sentence proves no token can start a match and
-                        # no anchor exists — skip normalize+tokenize
-                        # (sent_id still advances: iter_raw_sentences
-                        # assigns ids before this filter)
-                        bstate["m"] += 1
-                        continue
-                    if bstate["n"] >= 1024 and bstate["m"] * 4 < bstate["n"]:
-                        bstate["probe"] = None
-                tokens = tokens_of_normalized(raw)
-                hits, cand = _scan_tokens(tokens, ac, skip, ft, gate)
-                aspans = find_spans(tokens, anchors, rmap)
-                if prune_empty and not hits and not aspans and not cand:
-                    continue
-                out.append((sent_id, rel_pos, tokens, hits, aspans,
-                            cand))
-            return out
-
-        return html.map(_page)
-
-    # pure function; non-determinism marking is an optimizer fence so the
-    # explode/filter over the UDF output cannot duplicate the
-    # ArrowEvalPython node (guide-documented filter-pushdown copy that
-    # doubled the whole scan per plan branch)
-    _fused = _fused.asNondeterministic()
-
-    df = pages
-    if lang is not None:
-        df = df.filter(F.col("lang") == lang)
-    return (
-        df.select("url", _fused(F.col("html")).alias("ss"))
-        .select("url", F.explode("ss").alias("s"))
-        .select(
-            "url",
-            F.col("s.sent_id").alias("sent_id"),
-            F.col("s.rel_pos").alias("rel_pos"),
-            F.col("s.tokens").alias("tokens"),
-            F.col("s.hits").alias("hits"),
-            F.col("s.amentions").alias("amentions"),
-            F.col("s.cand").alias("cand"),
-        )
-    )
-
-
-def hot_hits(sent: DataFrame) -> DataFrame:
-    """Explode the automaton hits of sentence rows into mention rows."""
-    return (
-        sent.filter(F.size("hits") > 0)
-        .select("url", "sent_id", "rel_pos", "tokens",
-                F.explode("hits").alias("m"))
-        .select("url", "sent_id", "rel_pos", "tokens",
-                F.col("m.start").alias("start"),
-                F.col("m.end").alias("end"),
-                F.col("m.alias").alias("alias"),
-                F.col("m.entity").alias("entity"))
-    )
-
-
-def anchor_mention_rows(sent: DataFrame) -> DataFrame:
-    """Explode the anchor spans of sentence rows into mention rows
-    (the trusted-mention shape build_entity_profiles consumes)."""
-    return (
-        sent.filter(F.size("amentions") > 0)
-        .select("url", "sent_id", "rel_pos", "tokens",
-                F.explode("amentions").alias("m"))
-        .select("url", "sent_id", "rel_pos", "tokens",
-                F.col("m.start").alias("start"),
-                F.col("m.end").alias("end"),
-                F.col("m.entity").alias("entity"))
-    )
-
-
-def detect_dictionary_mentions_mapside(
-    pages: DataFrame, head_bc, tail: DataFrame,
-    lang: str | None = "en", max_tail_tokens: int = 6,
-    max_first_tokens: int = 2_000_000,
-) -> DataFrame:
-    """Dictionary mention detection without a full-dictionary collect.
-
-    Hot path: the bounded head automaton inside the fused pandas UDF.
-    Tail path: sentence n-grams (1..max_tail_tokens) pre-filtered to
-    positions whose first token starts some tail alias, then a shuffle
-    join against the tail alias table on the tokenizer-space key — at
-    warehouse scale that table is bucketed by ``key`` so the join
-    co-locates. The position pre-filter runs inside the scan UDF against
-    the broadcast first-token set whenever it fits ``max_first_tokens``
-    (sentences with no hit and no candidate are dropped before Arrow);
-    above the bound it falls back to posexplode + broadcast semi-join over
-    every sentence. Output schema matches ``fused_dictionary_mentions``.
-    """
-    from fact_extraction_spark.caches import track
-
-    ft_bc, wit_bc, tail_empty = collect_tail_broadcasts(tail,
-                                                         max_first_tokens)
-    sent = track(fused_sentence_hits(
-        pages, head_bc, lang=lang, first_tok_bc=ft_bc,
-        prune_empty=ft_bc is not None, witness_bc=wit_bc).persist())
-    sent.count()  # eager fill: branches of one action race an unfilled cache
-    return _mapside_union(sent, tail, max_tail_tokens,
-                          use_cand=ft_bc is not None, tail_empty=tail_empty)
-
-
 def _mapside_union(sent: DataFrame, tail: DataFrame,
                    max_tail_tokens: int, use_cand: bool = False,
                    tail_empty: bool | None = None) -> DataFrame:
@@ -1455,15 +985,14 @@ def _mapside_union(sent: DataFrame, tail: DataFrame,
     (url, sent_id, rel_pos, tokens, hits[, cand]).
 
     ``use_cand`` requires ``sent.cand`` to hold the candidate tail-start
-    positions (computed in the scan UDF against the broadcast first-token
-    set): the n-gram build then explodes ONLY those positions — on filler-
-    heavy web text a >100× row reduction over posexploding every token.
+    positions (computed in the scan kernel against the broadcast
+    first-token set): the n-gram build then explodes ONLY those positions —
+    on filler-heavy web text a >100× row reduction over posexploding every
+    token.
 
     ``tail_empty``: the caller's already-known emptiness of the tail
     (collect_tail_broadcasts probes it once at context build); None means
     unknown — probe here as before."""
-    from fact_extraction_spark.caches import track
-
     hot = hot_hits(sent)
 
     if tail_empty is True:
@@ -1518,18 +1047,3 @@ def _mapside_union(sent: DataFrame, tail: DataFrame,
                 "start", "end", "alias", "entity")
     )
     return hot.unionByName(tail_hits)
-
-
-def collect_redirect_map(spark: SparkSession, redirects: DataFrame):
-    """Broadcast {alias → final target} (underscore form, capitalized).
-
-    When two aliases collapse to the same capitalized form with different
-    targets, the smallest target wins — deterministic, and identical to the
-    groupBy/min rule of ``anchor_windows_relational``."""
-    resolved = resolve_redirects(redirects)
-    mapping: dict[str, str] = {}
-    for r in resolved.collect():
-        alias, target = _capitalize(r["alias"]), _capitalize(r["target"])
-        if alias not in mapping or target < mapping[alias]:
-            mapping[alias] = target
-    return spark.sparkContext.broadcast(mapping)

@@ -36,18 +36,23 @@ from fact_extraction_spark.operators.link_ranking import (
     build_entity_profiles, compute_idf, disambiguate_mentions,
 )
 from fact_extraction_spark.operators.mentions import (
-    _mapside_union, alias_join_keys, anchor_mention_rows,
-    anchor_windows_relational,
-    build_alias_candidates, collect_alias_broadcast,
-    collect_redirect_map,
-    fused_anchor_mentions, fused_anchor_windows,
-    fused_sentence_hits_and_anchors, hot_hits, split_alias_dictionary,
+    _filled, _mapside_union, alias_join_keys, anchor_mention_rows,
+    build_alias_candidates, collect_alias_broadcast, collect_redirect_map,
+    collect_tail_broadcasts, fused_anchor_windows,
+    fused_sentence_hits_and_anchors, hot_hits, resolve_redirects,
+    split_alias_dictionary,
 )
-from fact_extraction_spark.operators.mentions import resolve_redirects
 from fact_extraction_spark.operators.scoring import score_candidates
 from fact_extraction_spark.operators.type_patterns import learn_type_patterns
 
 logger = logging.getLogger(__name__)
+
+# the accepted values of PipelineConfig's strategy fields
+_CHOICES = {
+    "mention_mode": ("anchors", "dictionary"),
+    "dictionary_strategy": ("auto", "broadcast", "mapside"),
+    "training_join_strategy": ("auto", "broadcast", "salted"),
+}
 
 
 @dataclass
@@ -117,14 +122,6 @@ class PipelineConfig:
     # old posexplode path broadcast the very same set for its semi-join).
     dictionary_prune_sentences: bool = True
     dictionary_first_token_broadcast_rows: int = 2_000_000
-    # Anchors-mode redirect resolution:
-    # "broadcast" (default) — match-time Python dict from a bounded
-    #   driver collect; fastest while the redirect table fits comfortably.
-    # "join" — zero driver state: the UDF emits unresolved spans and
-    #   resolution/dedup/self-link happen relationally (Catalyst picks
-    #   broadcast vs shuffle by the redirect table's size). Use at
-    #   dictionary sizes where a per-executor Python dict stops being sane.
-    redirect_strategy: str = "broadcast"
     # windows⋈training-facts join strategy (SURVEY north star "salted joins
     # + AQE"): "broadcast" (the capped fact table is small), "salted" for
     # uncapped fact sets too big to broadcast — routes mega-entity keys
@@ -171,6 +168,14 @@ class PipelineConfig:
     # so the hot path leaves it off and sinks do sortWithinPartitions.
     sort_output: bool = False
 
+    def __post_init__(self):
+        for name, allowed in _CHOICES.items():
+            value = getattr(self, name)
+            if value not in allowed:
+                raise ValueError(
+                    f"PipelineConfig.{name}={value!r}: expected one of "
+                    f"{', '.join(map(repr, allowed))}")
+
 
 @dataclass
 class LearnedModel:
@@ -204,13 +209,8 @@ class LearnedModel:
 
 def _build_dict_ctx(spark: SparkSession, pages: DataFrame,
                     redirects: DataFrame, cfg: "PipelineConfig",
-                    cands: DataFrame | None = None,
                     extras: dict | None = None) -> dict:
     """Dictionary-mode detection context per cfg.dictionary_strategy.
-
-    ``cands`` overrides the derived (alias, entity) candidate table —
-    used by dict_scale_bench.py to sweep dictionary sizes on a fixed
-    corpus when locating the broadcast/mapside crossover.
 
     ``extras`` (a LearnedModel.extras dict) memoizes the built context per
     (strategy knobs, pages, redirects) WITHIN the model's lifetime — the
@@ -224,7 +224,7 @@ def _build_dict_ctx(spark: SparkSession, pages: DataFrame,
     are re-pinned on hit because cache releases between legs may have
     dropped them."""
     ctx_key = None
-    if extras is not None and cands is None:
+    if extras is not None:
         ctx_key = ("dict_ctx", cfg.dictionary_strategy,
                    cfg.dictionary_auto_threshold, cfg.dictionary_hot_k,
                    cfg.max_tail_tokens, cfg.dictionary_prune_sentences,
@@ -237,8 +237,7 @@ def _build_dict_ctx(spark: SparkSession, pages: DataFrame,
             if ctx["mode"] == "mapside":
                 track(ctx["tail"].persist())
             return ctx
-    if cands is None:
-        cands = build_alias_candidates(pages, redirects)
+    cands = build_alias_candidates(pages, redirects)
     # AMBIGUITY is a dictionary-side property: an alias needs tf-idf
     # disambiguation iff its MATCH KEY maps to >1 entity. Matching happens
     # in token space (the automaton keys tokenized aliases; the mapside
@@ -307,8 +306,6 @@ def _build_dict_ctx(spark: SparkSession, pages: DataFrame,
     # join then falls back to posexplode + semi-join / ungated scanning
     ft_bc = wit_bc = tail_known_empty = None
     if cfg.dictionary_prune_sentences:
-        from fact_extraction_spark.operators.mentions import (
-            collect_tail_broadcasts)
         bound = cfg.dictionary_first_token_broadcast_rows
         ft_bc, wit_bc, tail_known_empty = collect_tail_broadcasts(
             tail_keyed, bound)
@@ -326,99 +323,70 @@ def _build_dict_ctx(spark: SparkSession, pages: DataFrame,
 
 
 def _page_mentions(pages: DataFrame, redirect_map_bc, lang: str | None,
-                   dict_ctx: dict | None = None,
-                   cfg: "PipelineConfig | None" = None) -> DataFrame:
-    """pages → mention rows, excluding self-links (page linking itself,
-    wikipedia_pattern_extractor.py:189-192 ``res != entity``).
+                   dict_ctx: dict, cfg: "PipelineConfig") -> DataFrame:
+    """Dictionary mode: pages → mention rows, excluding self-links (page
+    linking itself, wikipedia_pattern_extractor.py:189-192
+    ``res != entity``).
 
-    With ``dict_ctx`` set (mention_mode="dictionary"), runs the north-star
-    stage 2: Aho-Corasick detection over the alias dictionary (full
-    broadcast or hot-head + relational tail, per dict_ctx["mode"]), then
-    tf-idf context-similarity disambiguation (stage 2b) with entity profiles
-    built from the trusted anchor-tagged mentions of the same pages.
+    Runs the north-star stage 2: Aho-Corasick detection over the alias
+    dictionary (full broadcast or hot-head + relational tail, per
+    dict_ctx["mode"]), then tf-idf context-similarity disambiguation
+    (stage 2b) with entity profiles built from the trusted anchor-tagged
+    mentions of the same pages.
     """
-    if dict_ctx is None:
-        # ONE ArrowEvalPython node for the whole html→mentions chain: three
-        # chained pandas UDFs would each get their own python worker per
-        # task (3× processes, 2 extra Arrow round-trips of the full text)
-        # and anti-scale at high core counts (see fused_anchor_mentions)
-        mentions = fused_anchor_mentions(pages, redirect_map_bc, lang=lang)
+    # ONE corpus pass yields both the dictionary candidates (automaton
+    # hits) and the trusted anchor mentions that build the tf-idf ranking
+    # profiles
+    broadcast = dict_ctx["mode"] == "broadcast"
+    head_bc = dict_ctx["alias_bc"] if broadcast else dict_ctx["head_bc"]
+    # prune filler sentences in the scan whenever the tail is covered:
+    # broadcast mode has no tail (the head IS the full dictionary), mapside
+    # mode needs the first-token set broadcast
+    ft_bc = dict_ctx.get("first_tok_bc")
+    prune = cfg.dictionary_prune_sentences and (broadcast or ft_bc is not None)
+    sent = _filled(fused_sentence_hits_and_anchors(
+        pages, head_bc, redirect_map_bc, lang=lang,
+        include_unanchored=cfg.dictionary_scan_unanchored,
+        first_tok_bc=ft_bc, prune_empty=prune,
+        witness_bc=dict_ctx.get("witness_bc"), no_tail=broadcast))
+    if broadcast:
+        candidates = hot_hits(sent)
     else:
-        # ONE corpus pass yields both the dictionary candidates (automaton
-        # hits) and the trusted anchor mentions that build the tf-idf
-        # ranking profiles — running them as two fused UDFs costs a second
-        # full html→sentences pass over the corpus
-        head_bc = (dict_ctx["alias_bc"] if dict_ctx["mode"] == "broadcast"
-                   else dict_ctx["head_bc"])
-        # prune filler sentences in the scan UDF whenever the tail is
-        # covered: broadcast mode has no tail (the head IS the full
-        # dictionary), mapside mode needs the first-token set broadcast
-        ft_bc = dict_ctx.get("first_tok_bc")
-        wit_bc = dict_ctx.get("witness_bc")
-        no_tail = dict_ctx["mode"] == "broadcast"
-        prune = bool(cfg.dictionary_prune_sentences if cfg else True) and (
-            no_tail or ft_bc is not None)
-        sent = track(fused_sentence_hits_and_anchors(
-            pages, head_bc, redirect_map_bc, lang=lang,
-            include_unanchored=(cfg.dictionary_scan_unanchored if cfg
-                                else False),
-            first_tok_bc=ft_bc, prune_empty=prune,
-            witness_bc=wit_bc, no_tail=no_tail).persist())
-        # EAGER cache fill: the sentence rows feed several INDEPENDENT
-        # subtrees of the downstream action (hot hits, candidate positions,
-        # the tail join-back, anchor-mention profiles, the ambiguous/
-        # unambiguous splits) — independent stages of one job run
-        # concurrently, and each that reaches an unfilled cache partition
-        # recomputes the whole html→scan UDF chain for it. One count()
-        # executes the corpus scan exactly once; every branch then reads
-        # the cache (the round-2 windows-persist lesson applied to the
-        # scan persist).
-        sent.count()
-        if dict_ctx["mode"] == "broadcast":
-            candidates = hot_hits(sent)
-        else:
-            candidates = _mapside_union(
-                sent.select("url", "sent_id", "rel_pos", "tokens", "hits",
-                            "cand"),
-                dict_ctx["tail"],
-                (cfg.max_tail_tokens if cfg else 6),
-                use_cand=ft_bc is not None,
-                tail_empty=dict_ctx.get("tail_empty"))
-        # stage 2b runs ONLY over hits of ambiguous aliases (dictionary-side
-        # split, see _build_dict_ctx); unambiguous hits pass through — the
-        # ranking subplan's corpus-sized shuffles shrink to the ambiguous
-        # slice, and when the dictionary has no ambiguity at all the
-        # profile/idf build is skipped outright (one dimension-table probe).
-        amb = dict_ctx["ambiguous"]
-        cols = ["url", "sent_id", "rel_pos", "tokens", "start", "end",
-                "entity"]
-        has_amb = dict_ctx.get("has_ambiguous")
-        if has_amb is None:
-            has_amb = amb.limit(1).count() > 0
-        if not has_amb:
-            mentions = candidates.select(*cols)
-        else:
-            amb_b = F.broadcast(amb)
-            unambig = candidates.join(amb_b, "alias", "left_anti") \
-                .select(*cols)
-            ambig = candidates.join(amb_b, "alias", "left_semi")
-            anchor_mentions = anchor_mention_rows(sent)
-            profiles = track(build_entity_profiles(
-                anchor_mentions,
-                max_profile_words=(cfg.max_profile_words if cfg else 64))
-                .persist())
-            idf = compute_idf(profiles)
-            ranked = disambiguate_mentions(ambig, profiles, idf) \
-                .drop("link_score")
-            mentions = unambig.unionByName(ranked.select(*cols))
-        # no stage boundary HERE: the caller's windows persist+count right
-        # after candidate_windows() is the boundary (same recompute
-        # protection), and the windows rows are far smaller than mention
-        # rows carrying full sentence tokens — the round-3 eager
-        # localCheckpoint at this spot wrote every mention row (tokens
-        # included) to local disk before windowing, 2.85× the anchors-mode
-        # extract (VERDICT r3 "What's wrong" #2). On a cluster the committed
-        # table between stages is the windows table (sinks/snapshot).
+        candidates = _mapside_union(
+            sent, dict_ctx["tail"], cfg.max_tail_tokens,
+            use_cand=ft_bc is not None,
+            tail_empty=dict_ctx.get("tail_empty"))
+    # stage 2b runs ONLY over hits of ambiguous aliases (dictionary-side
+    # split, see _build_dict_ctx); unambiguous hits pass through — the
+    # ranking subplan's corpus-sized shuffles shrink to the ambiguous
+    # slice, and when the dictionary has no ambiguity at all the
+    # profile/idf build is skipped outright (one dimension-table probe).
+    amb = dict_ctx["ambiguous"]
+    cols = ["url", "sent_id", "rel_pos", "tokens", "start", "end", "entity"]
+    has_amb = dict_ctx.get("has_ambiguous")
+    if has_amb is None:
+        has_amb = amb.limit(1).count() > 0
+    if not has_amb:
+        mentions = candidates.select(*cols)
+    else:
+        amb_b = F.broadcast(amb)
+        unambig = candidates.join(amb_b, "alias", "left_anti").select(*cols)
+        ambig = candidates.join(amb_b, "alias", "left_semi")
+        profiles = track(build_entity_profiles(
+            anchor_mention_rows(sent),
+            max_profile_words=cfg.max_profile_words).persist())
+        idf = compute_idf(profiles)
+        ranked = disambiguate_mentions(ambig, profiles, idf) \
+            .drop("link_score")
+        mentions = unambig.unionByName(ranked.select(*cols))
+    # no stage boundary HERE: the caller's windows persist+count right
+    # after candidate_windows() is the boundary (same recompute
+    # protection), and the windows rows are far smaller than mention rows
+    # carrying full sentence tokens — the round-3 eager localCheckpoint at
+    # this spot wrote every mention row (tokens included) to local disk
+    # before windowing, 2.85× the anchors-mode extract (VERDICT r3 "What's
+    # wrong" #2). On a cluster the committed table between stages is the
+    # windows table (sinks/snapshot).
     return mentions.filter(
         F.col("entity") != capitalize_first(strip_name("url")))
 
@@ -450,9 +418,7 @@ def learn(
         F.concat(F.lit("https://en.wikipedia.org/wiki/"), F.col("subj")).alias("url"))
     train_pages = pages.join(train_urls, "url", "left_semi")
 
-    redirect_map_bc = None
-    if cfg.mention_mode != "anchors" or cfg.redirect_strategy == "broadcast":
-        redirect_map_bc = collect_redirect_map(spark, redirects)
+    redirect_map_bc = collect_redirect_map(spark, redirects)
     dict_ctx = None
     if cfg.mention_mode == "dictionary":
         dict_ctx = _build_dict_ctx(spark, pages, redirects, cfg)
@@ -464,14 +430,9 @@ def learn(
     # mode needs per-sentence tokens for tf-idf ranking, so it keeps the
     # mention-row path.
     if cfg.mention_mode == "anchors":
-        if cfg.redirect_strategy == "join":
-            windows = anchor_windows_relational(
-                train_pages, redirects, lang=cfg.lang,
-                window=cfg.window).persist()
-        else:
-            windows = fused_anchor_windows(
-                train_pages, redirect_map_bc, lang=cfg.lang,
-                window=cfg.window).persist()
+        windows = fused_anchor_windows(
+            train_pages, redirect_map_bc, lang=cfg.lang,
+            window=cfg.window).persist()
     else:
         mentions = _page_mentions(train_pages, redirect_map_bc, cfg.lang,
                                   dict_ctx, cfg)
@@ -642,17 +603,9 @@ def extract(
 
     # reuse the broadcasts learn() already built (redirect resolution is an
     # iterative driver loop — a fixed serial cost worth paying exactly once)
-    needs_rmap = (cfg.mention_mode != "anchors"
-                  or cfg.redirect_strategy == "broadcast")
     redirect_map_bc = model.extras.get("redirect_map_bc")
-    if needs_rmap and redirect_map_bc is None:
+    if redirect_map_bc is None:
         redirect_map_bc = collect_redirect_map(spark, redirects)
-    dict_ctx = model.extras.get("dict_ctx")
-    if cfg.mention_mode == "dictionary" and dict_ctx is None:
-        dict_ctx = _build_dict_ctx(spark, pages, redirects, cfg,
-                                   extras=model.extras)
-    if cfg.mention_mode != "dictionary":
-        dict_ctx = None
     # scoring fans out over windows (candidate keys + slot-word matches);
     # persist so the extraction UDF chain executes once. redlink drop =
     # fact_extractor.py:189-191. The persist holds the SLIM scoring schema
@@ -661,15 +614,12 @@ def extract(
     # byte not in this table is a byte every scoring pass doesn't re-read.
     from fact_extraction_spark.operators.scoring import slim_score_windows
     if cfg.mention_mode == "anchors":
-        if cfg.redirect_strategy == "join":
-            windows = anchor_windows_relational(
-                discovery, redirects, lang=cfg.lang,
-                window=cfg.window, drop_redlinks=True)
-        else:
-            windows = fused_anchor_windows(
-                discovery, redirect_map_bc, lang=cfg.lang,
-                window=cfg.window, drop_redlinks=True)
+        windows = fused_anchor_windows(
+            discovery, redirect_map_bc, lang=cfg.lang,
+            window=cfg.window, drop_redlinks=True)
     else:
+        dict_ctx = model.extras.get("dict_ctx") or _build_dict_ctx(
+            spark, pages, redirects, cfg, extras=model.extras)
         mentions = _page_mentions(discovery, redirect_map_bc, cfg.lang,
                                   dict_ctx, cfg)
         mentions = mentions.filter(~F.col("entity").contains("redlink=1"))

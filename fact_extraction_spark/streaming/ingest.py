@@ -38,7 +38,7 @@ def stream_pages(spark: SparkSession, pages_dir: str,
 
 def streaming_mentions(pages: DataFrame, redirect_map_bc,
                        lang: str | None = "en") -> DataFrame:
-    """pages stream → mention rows; the batch fused Arrow UDF reused
+    """pages stream → mention rows; the batch scan kernel reused
     unchanged on micro-batches. ``warc_ts`` rides along so event-time
     aggregates need no stream-stream join."""
     m = fused_anchor_mentions(pages, redirect_map_bc, lang=lang,

@@ -2,8 +2,11 @@
 
 import os
 
+import pytest
+
 from fact_extraction_spark.plans.config import (
     generate_config_if_missing, load_config)
+from fact_extraction_spark.plans.pipeline import PipelineConfig
 
 
 def test_missing_config_generated_from_default(tmp_path):
@@ -84,3 +87,15 @@ type_matching = False
 """)
     cfg = load_config(str(path))
     assert cfg.type_matching is False
+
+
+@pytest.mark.parametrize("field, typo", [
+    ("mention_mode", "dictonary"),
+    ("dictionary_strategy", "mapsid"),
+    ("training_join_strategy", "salt"),
+])
+def test_unknown_strategy_value_rejected(field, typo):
+    """A misspelt strategy value fails at construction instead of silently
+    running another path."""
+    with pytest.raises(ValueError, match=field):
+        PipelineConfig(**{field: typo})

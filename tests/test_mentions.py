@@ -3,12 +3,14 @@
 import pytest
 from fact_extraction_spark.operators.extract_text import explode_sentences, extract_text
 from fact_extraction_spark.operators.mentions import (
+    anchor_mention_rows,
     build_alias_table,
     collect_alias_broadcast,
     collect_redirect_map,
     detect_dictionary_mentions,
+    hot_hits,
     resolve_redirects,
-    tag_anchor_mentions,
+    scan_kernel,
 )
 from fact_extraction_spark.textops.aho import TokenAhoCorasick
 from pyspark.sql import functions as F
@@ -43,7 +45,8 @@ def test_resolve_redirects_multi_hop(spark, tables):
 def test_anchor_mentions_resolve_aliases(spark, tables):
     sents = explode_sentences(extract_text(tables["pages"], lang=None))
     rmap = collect_redirect_map(spark, tables["redirects"])
-    mentions = tag_anchor_mentions(sents, rmap).cache()
+    mentions = anchor_mention_rows(
+        scan_kernel(sents, redirect_map_bc=rmap)).cache()
     ents = {r["entity"] for r in mentions.select("entity").distinct().collect()}
     # the redirect-only city must surface under its canonical title
     assert "Veldt_Harbor" in ents
@@ -71,8 +74,8 @@ def test_anchor_and_dictionary_agree_on_linked_spans(spark, tables):
     rmap = collect_redirect_map(spark, tables["redirects"])
     alias_bc = collect_alias_broadcast(
         spark, build_alias_table(tables["pages"], tables["redirects"]))
-    anchor = tag_anchor_mentions(sents, rmap).select(
-        "url", "sent_id", "start", "end", "entity")
+    anchor = anchor_mention_rows(scan_kernel(sents, redirect_map_bc=rmap)) \
+        .select("url", "sent_id", "start", "end", "entity")
     dictm = detect_dictionary_mentions(sents, alias_bc).select(
         "url", "sent_id", "start", "end", "entity")
     # every anchor mention is also found by the dictionary scan
@@ -82,11 +85,13 @@ def test_anchor_and_dictionary_agree_on_linked_spans(spark, tables):
 
 
 def test_fused_anchor_equals_chained(spark, tables):
-    """The single-UDF fused path is row-identical to the 3-stage chain."""
+    """Anchor tagging: the kernel over pages is row-identical to the kernel
+    over the sentence rows of the stage-1 chain
+    (extract_text → explode_sentences)."""
     from fact_extraction_spark.operators.mentions import fused_anchor_mentions
     rmap = collect_redirect_map(spark, tables["redirects"])
     sents = explode_sentences(extract_text(tables["pages"], lang="en"))
-    chained = tag_anchor_mentions(sents, rmap)
+    chained = anchor_mention_rows(scan_kernel(sents, redirect_map_bc=rmap))
     fused = fused_anchor_mentions(tables["pages"], rmap, lang="en")
     cols = ["url", "sent_id", "rel_pos", "start", "end", "entity"]
     a = sorted(map(tuple, chained.select(*cols).collect()))
@@ -95,13 +100,16 @@ def test_fused_anchor_equals_chained(spark, tables):
 
 
 def test_fused_dictionary_equals_chained(spark, tables):
+    """Dictionary hits: the kernel over pages is row-identical to the
+    declared sentence-row query over the stage-1 chain."""
     from fact_extraction_spark.operators.mentions import (
-        build_alias_candidates, fused_dictionary_mentions)
+        build_alias_candidates)
     alias_bc = collect_alias_broadcast(
         spark, build_alias_candidates(tables["pages"], tables["redirects"]))
     sents = explode_sentences(extract_text(tables["pages"], lang="en"))
     chained = detect_dictionary_mentions(sents, alias_bc)
-    fused = fused_dictionary_mentions(tables["pages"], alias_bc, lang="en")
+    fused = hot_hits(scan_kernel(tables["pages"], head_bc=alias_bc,
+                                 no_tail=True, lang="en"))
     cols = ["url", "sent_id", "rel_pos", "start", "end", "alias", "entity"]
     a = sorted(map(tuple, chained.select(*cols).collect()))
     b = sorted(map(tuple, fused.select(*cols).collect()))
@@ -160,13 +168,12 @@ def test_split_alias_dictionary_partitions_by_alias(spark, tables):
 
 
 def test_mapside_dictionary_detection_equals_broadcast(spark, tables):
-    """The documented scale fallback (hot-head automaton + n-gram tail join)
-    emits exactly the broadcast path's mention rows (mentions.py module
-    docstring contract)."""
+    """The scale strategy (hot-head automaton + n-gram tail join) over
+    sentence rows emits exactly the mention rows of the full-dictionary
+    automaton over the same pages."""
     from fact_extraction_spark.operators.mentions import (
         build_alias_candidates, collect_alias_broadcast,
-        detect_dictionary_mentions_mapside, fused_dictionary_mentions,
-        split_alias_dictionary)
+        detect_dictionary_mentions_mapside_sentences, split_alias_dictionary)
 
     pages = tables["pages"]
     cands = build_alias_candidates(pages, tables["redirects"])
@@ -174,65 +181,20 @@ def test_mapside_dictionary_detection_equals_broadcast(spark, tables):
     full_bc = collect_alias_broadcast(spark, cands)
     want = {(r["url"], r["sent_id"], r["start"], r["end"],
              r["alias"], r["entity"])
-            for r in fused_dictionary_mentions(pages, full_bc,
-                                               lang=None).collect()}
+            for r in hot_hits(scan_kernel(pages, head_bc=full_bc,
+                                          no_tail=True)).collect()}
 
     # tiny hot_k so the tail path carries real weight
     head, tail = split_alias_dictionary(cands, hot_k=3, max_tail_tokens=6)
     head_bc = collect_alias_broadcast(spark, head.select("alias", "entity"))
-    got_rows = detect_dictionary_mentions_mapside(
-        pages, head_bc, tail, lang=None, max_tail_tokens=6).collect()
+    sents = explode_sentences(extract_text(pages, lang=None))
+    got_rows = detect_dictionary_mentions_mapside_sentences(
+        sents, head_bc, tail, max_tail_tokens=6).collect()
     got = {(r["url"], r["sent_id"], r["start"], r["end"],
             r["alias"], r["entity"]) for r in got_rows}
     assert got == want
     # tokens context rides along on both paths (link ranking needs it)
     assert all(r["tokens"] for r in got_rows)
-
-
-def test_anchor_windows_relational_equals_broadcast(spark, tables):
-    """redirect_strategy="join" (zero driver state: unresolved spans +
-    relational resolve/dedup/self-link) is row-identical to the match-time
-    broadcast-dict path, incl. the redirect-only entity, multi-hop chains
-    and the capitalize hotfix."""
-    from fact_extraction_spark.operators.mentions import (
-        anchor_windows_relational, fused_anchor_windows)
-
-    rmap = collect_redirect_map(spark, tables["redirects"])
-    bc = fused_anchor_windows(tables["pages"], rmap, lang="en", window=4)
-    jn = anchor_windows_relational(tables["pages"], tables["redirects"],
-                                   lang="en", window=4)
-
-    def rows(df):
-        return sorted(
-            (r["url"], r["sent_id"], r["rel_pos"], r["subject"], r["object"],
-             r["n_slots"], tuple((s["slot"], s["word"]) for s in r["slots"]))
-            for r in df.collect())
-
-    a, b = rows(bc), rows(jn)
-    assert a == b and a
-
-
-@pytest.mark.slow
-def test_pipeline_join_redirect_strategy_matches_broadcast(spark, tables):
-    """Full learn+extract under redirect_strategy="join" emits the same
-    triples as the default broadcast strategy (and never builds the
-    redirect map broadcast)."""
-    from fact_extraction_spark.plans.pipeline import (
-        PipelineConfig, extract, learn)
-
-    outs = {}
-    for strategy in ("broadcast", "join"):
-        cfg = PipelineConfig(articles_limit=0, redirect_strategy=strategy)
-        model = learn(spark, tables["pages"], tables["facts"],
-                      tables["types"], tables["redirects"], cfg,
-                      exclude_subjects=tables["ground_truth"])
-        if strategy == "join":
-            assert model.extras["redirect_map_bc"] is None
-        triples = extract(spark, tables["pages"], model, tables["types"],
-                          tables["redirects"], cfg)
-        outs[strategy] = {(r["subj"], r["pred"], r["obj"], round(r["score"], 9))
-                          for r in triples.collect()}
-    assert outs["broadcast"] == outs["join"] and outs["broadcast"]
 
 
 def test_dictionary_strategy_auto_switch(spark, tables):
@@ -256,10 +218,9 @@ def test_dictionary_strategy_auto_switch(spark, tables):
 
 def test_capitalize_colliding_redirects_resolve_identically(spark):
     """Two aliases collapsing to one capitalize_first form with different
-    targets: both the broadcast dict and the relational join keep the same
-    deterministic (min) target, so the paths stay row-identical."""
-    from fact_extraction_spark.operators.mentions import (
-        anchor_windows_relational, fused_anchor_windows)
+    targets: the broadcast redirect map keeps one deterministic (min)
+    target, and anchor windows resolve to it."""
+    from fact_extraction_spark.operators.mentions import fused_anchor_windows
 
     redirects = spark.createDataFrame(
         [("vale_Town", "Zeta_City"), ("Vale_Town", "Alpha_City")],
@@ -278,31 +239,30 @@ def test_capitalize_colliding_redirects_resolve_identically(spark):
             for r in df.collect())
 
     bc = rows(fused_anchor_windows(pages, rmap, lang="en", window=2))
-    jn = rows(anchor_windows_relational(pages, redirects, lang="en", window=2))
-    assert bc == jn and bc
-    assert bc[0][3] == "Alpha_City"
+    assert bc and bc[0][3] == "Alpha_City"
 
 
 def test_mapside_first_token_prune_fallback_identical(spark, tables):
     """The in-scan candidate path (tail first-token set broadcast into the
-    scan UDF: filler sentences pruned before Arrow, only candidate
+    scan kernel: filler sentences pruned before Arrow, only candidate
     positions explode) and the posexplode + semi-join fallback emit
     identical mention rows."""
     from fact_extraction_spark.operators.mentions import (
         build_alias_candidates, collect_alias_broadcast,
-        detect_dictionary_mentions_mapside, split_alias_dictionary)
+        detect_dictionary_mentions_mapside_sentences, split_alias_dictionary)
 
     pages = tables["pages"]
     cands = build_alias_candidates(pages, tables["redirects"])
     head, tail = split_alias_dictionary(cands, hot_k=3, max_tail_tokens=6)
     head_bc = collect_alias_broadcast(spark, head.select("alias", "entity"))
+    sents = explode_sentences(extract_text(pages, lang=None))
 
     def rows(max_ft):
         return sorted(
             (r["url"], r["sent_id"], r["start"], r["end"],
              r["alias"], r["entity"], tuple(r["tokens"]))
-            for r in detect_dictionary_mentions_mapside(
-                pages, head_bc, tail, lang=None, max_tail_tokens=6,
+            for r in detect_dictionary_mentions_mapside_sentences(
+                sents, head_bc, tail, max_tail_tokens=6,
                 max_first_tokens=max_ft).collect())
 
     pruned, fallback = rows(2_000_000), rows(0)
@@ -520,12 +480,12 @@ def _para_fastpath_pages(spark):
 
 
 def test_paragraph_fastpath_rows_identical(spark):
-    """fused_sentence_hits / fused_sentence_hits_and_anchors with pruning
-    (probes + paragraph skip active) emit exactly the pruned projection of
-    the prune=False rows — same sent_ids, rel_pos, tokens, hits, anchor
+    """The page-input kernel with pruning (probes + paragraph skip active),
+    without and with anchor tagging, emits exactly the pruned projection
+    of the prune=False rows — same sent_ids, rel_pos, tokens, hits, anchor
     spans and cand positions — on the corpus of _para_fastpath_pages."""
     from fact_extraction_spark.operators.mentions import (
-        fused_sentence_hits, fused_sentence_hits_and_anchors)
+        fused_sentence_hits_and_anchors)
 
     pages = _para_fastpath_pages(spark)
     aliases = [("Alpha City", "Alpha_City"),
@@ -538,12 +498,12 @@ def test_paragraph_fastpath_rows_identical(spark):
                 tuple(map(tuple, r["hits"])), tuple(r["cand"]))
 
     pruned = sorted(
-        key(r) for r in fused_sentence_hits(
-            pages, head_bc, lang=None, include_unanchored=True,
+        key(r) for r in scan_kernel(
+            pages, head_bc=head_bc, include_unanchored=True,
             prune_empty=True, no_tail=True).collect())
     full = sorted(
-        key(r) for r in fused_sentence_hits(
-            pages, head_bc, lang=None, include_unanchored=True,
+        key(r) for r in scan_kernel(
+            pages, head_bc=head_bc, include_unanchored=True,
             prune_empty=False, no_tail=True).collect()
         if r["hits"] or r["cand"])
     assert pruned == full and pruned

@@ -48,9 +48,11 @@ def test_incremental_ingest_exactly_once(spark, tables, page_batches, tmp_path):
     # incremental total == batch-mode total over the full corpus
     from fact_extraction_spark.operators.extract_text import (
         explode_sentences, extract_text)
-    from fact_extraction_spark.operators.mentions import tag_anchor_mentions
-    expected = tag_anchor_mentions(
-        explode_sentences(extract_text(pages, lang="en")), rmap).count()
+    from fact_extraction_spark.operators.mentions import (
+        anchor_mention_rows, scan_kernel)
+    expected = anchor_mention_rows(scan_kernel(
+        explode_sentences(extract_text(pages, lang="en")),
+        redirect_map_bc=rmap)).count()
     assert total == expected
 
 
@@ -79,11 +81,11 @@ def test_windowed_counts_with_watermark(spark, tables, page_batches, tmp_path):
 
     from fact_extraction_spark.operators.extract_text import (
         explode_sentences, extract_text)
-    from fact_extraction_spark.operators.mentions import tag_anchor_mentions
-    bm = tag_anchor_mentions(
-        explode_sentences(extract_text(first, lang="en"),
-                          keep_cols=("warc_ts",)),
-        rmap, keep_cols=("warc_ts",))
+    from fact_extraction_spark.operators.mentions import (
+        anchor_mention_rows, scan_kernel)
+    bm = anchor_mention_rows(scan_kernel(
+        explode_sentences(extract_text(first, lang="en")),
+        redirect_map_bc=rmap)).join(first.select("url", "warc_ts"), "url")
     expected = {
         (r["window_start"], r["entity"]): r["n_mentions"]
         for r in bm
