@@ -1,4 +1,4 @@
 """Large-scale training-data pipeline operators (dedup, similarity search,
-text quality, multimodal plumbing) — first-class components alongside the KG
-pipeline, all DataFrame-first with deterministic, oracle-checkable hashing.
+text quality) — first-class components alongside the KG pipeline, all
+DataFrame-first with deterministic, oracle-checkable hashing.
 """

@@ -19,19 +19,3 @@ def md5_long(col: Column) -> Column:
     """First 60 bits of md5(col) as a non-negative long."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
-
-def seeded_md5_long(seed: int, col: Column) -> Column:
-    """Independent hash family member i: md5 of "<seed>:" || col."""
-    return md5_long(F.concat(F.lit(f"{seed}:"), col))
-
-
-MD5_LONG_SQL = "(('0x' || substring(md5({expr}), 1, 15))::BIGINT)"
-
-
-def md5_long_sql(expr: str) -> str:
-    """The DuckDB-equivalent expression (oracle side)."""
-    return MD5_LONG_SQL.format(expr=expr)
-
-
-def seeded_md5_long_sql(seed_expr: str, expr: str) -> str:
-    return MD5_LONG_SQL.format(expr=f"({seed_expr} || ':' || {expr})")

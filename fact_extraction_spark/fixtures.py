@@ -475,12 +475,3 @@ def generate_bench_corpus(spark, seed: int, n_persons: int, out_dir: str,
         .write.mode("append").parquet(f"{out_dir}/pages.parquet")
     gen.unpersist()
 
-
-def write_corpus_parquet(spark, fx: FixtureCorpus, out_dir: str,
-                         partitions: int = 64) -> None:
-    """Materialize as parquet. ``partitions`` sets the pages file count —
-    the scan-side parallelism ceiling (a 100 TB table has thousands of
-    files; an 8-file fixture would cap every downstream stage at 8 tasks)."""
-    dfs = corpus_to_dataframes(spark, fx, partitions=partitions)
-    for name, df in dfs.items():
-        df.write.mode("overwrite").parquet(f"{out_dir}/{name}.parquet")

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fact_extraction_spark.functions.uri import capitalize_first, strip_name
+
 RELATIVE_POSITION_WEIGHT = 0.15  # pattern_matcher.py:45
 SYNTAX_WEIGHT = 1.0              # pattern_matcher.py:46
 DEFAULT_MATCH_THRESHOLD = 0.005  # fact_extractor.py:18 (config default 0.5)
@@ -41,12 +43,6 @@ CAND_KEY = ["url", "sent_id", "subject", "object"]
 # analysis), so trading ~25 stored+rescanned string bytes per candidate
 # for a few ALU ops on an otherwise stalled core is the right direction.
 SLIM_KEY = ["url", "sent_id", "object"]
-# int-url variant (VERDICT r5 Next #3): the ~60-byte url string — the
-# dominant remaining bytes-per-candidate — is replaced by its xxhash64
-# through the persist and every scoring scan/join; the string (and the
-# derived subject) is re-attached AFTER the threshold filter by a join
-# against the url dimension, which touches only the surviving rows.
-SLIM_KEY_INT = ["url_id", "sent_id", "object"]
 
 
 def _slot_key(slot_col, word_col):
@@ -68,38 +64,16 @@ def hashed_slot_keys():
     return F.transform("slots", lambda s: _slot_key(s["slot"], s["word"]))
 
 
-def slim_score_windows(windows: DataFrame, int_url: bool = False) -> DataFrame:
+def slim_score_windows(windows: DataFrame) -> DataFrame:
     """Project candidate windows to the minimal schema scoring needs, with
     the slot words hash-encoded and the derivable ``subject`` column
     dropped (see SLIM_KEY). extract() persists THIS instead of the full
     nested-string windows: the persist and every scan over it then carry
     8 bytes per slot instead of a string word and no subject string at all
     (learn() keeps the full slots — pattern learning needs the actual
-    words).
-
-    ``int_url=True`` (SLIM_KEY_INT) additionally hash-encodes the url;
-    pass the matching ``url_dim`` to ``score_candidates`` so strings can
-    be re-attached after the threshold filter."""
-    if int_url:
-        return windows.select(
-            F.xxhash64("url").alias("url_id"), "sent_id", "object",
-            "rel_pos", "n_slots", hashed_slot_keys().alias("slot_keys"))
+    words)."""
     return windows.select(*SLIM_KEY, "rel_pos", "n_slots",
                           hashed_slot_keys().alias("slot_keys"))
-
-
-def url_dim(discovery: DataFrame) -> DataFrame:
-    """(url_id, url, subject) dimension for the int-url slim persist: one
-    row per distinct discovery url (a superset of the candidate urls —
-    extra rows simply never match). Collision risk is the slot-key
-    argument again: two distinct urls sharing an xxhash64 (P < n²/2⁶⁴ —
-    ~10⁻⁸ at 10⁶ pages) would cross-attach two pages' rows; at 10¹²-page
-    scale widen the key to two independent hashes."""
-    from fact_extraction_spark.functions.uri import (
-        capitalize_first, strip_name)
-    return discovery.select("url").distinct().select(
-        F.xxhash64("url").alias("url_id"), "url",
-        capitalize_first(strip_name("url")).alias("subject"))
 
 
 def _entity_side_scores(types: DataFrame, type_probs: DataFrame, side: str) -> DataFrame:
@@ -190,12 +164,14 @@ def score_candidates(
     match_threshold: float = DEFAULT_MATCH_THRESHOLD,
     type_matching: bool = True,
     side_broadcast_rows: int = 5_000_000,
-    url_map: DataFrame | None = None,
 ) -> DataFrame:
-    """windows (candidate context rows) → scored (subj, pred, obj, score, …).
+    """slim windows (``slim_score_windows``) → scored (subj, pred, obj,
+    score, …).
 
-    ``windows`` comes from ``lexical_patterns.candidate_windows`` over
-    discovery pages. All learned tables are broadcast dims.
+    ``windows`` is the SLIM_KEY projection of
+    ``lexical_patterns.candidate_windows`` over discovery pages: SLIM_KEY +
+    ``rel_pos``, ``n_slots``, ``slot_keys``. All learned tables are
+    broadcast dims.
 
     ``type_matching=False`` reproduces the reference exactly
     (fact_extractor.py:135-141 + pattern_matcher.py:24-25): every candidate
@@ -203,48 +179,22 @@ def score_candidates(
     gate), and the match score is the pattern-intersection (syntax) score
     alone — no type scores, no position term, no weighted mean.
     """
-    # windows hold ONE nested row per candidate (unique by construction in
+    # windows hold ONE row per candidate (unique by construction in
     # fused_anchor_windows / candidate_windows) — no corpus-wide distinct.
     # ``slot_keys`` hash-encodes each filled slot (slot, word) to int64 so
     # the match count is a codegen array_intersect of LONG arrays against a
     # broadcast per-relation key array — NOT an explode + broadcast-join +
     # groupBy(count) + join back, which costs two corpus-sized shuffles and
     # was the dominant allocation source at high core counts
-    # (BENCH/BASELINE.md round-2 task-time-inflation analysis). A caller
-    # that pre-projected via ``slim_score_windows`` already carries
-    # slot_keys and no slots column at all.
-    int_url = "url_id" in windows.columns
-    if int_url:
-        # SLIM_KEY_INT input: candidates carry an 8-byte url hash; url and
-        # the derived subject live only in the url dimension and are
-        # re-attached after the threshold filter (finalize below)
-        if url_map is None:
-            raise ValueError("int-url slim windows require url_map "
-                             "(scoring.url_dim over the discovery pages)")
-        cands = windows.select(*SLIM_KEY_INT, "rel_pos", "n_slots",
-                               "slot_keys")
-    else:
-        if "subject" not in windows.columns:
-            # slim input (SLIM_KEY): recompute the page-title subject from
-            # url in codegen — cheaper than storing and re-reading it per
-            # scan
-            from fact_extraction_spark.functions.uri import (
-                capitalize_first, strip_name)
-            windows = windows.withColumn(
-                "subject", capitalize_first(strip_name("url")))
-        if "slot_keys" in windows.columns:
-            cands = windows.select(*CAND_KEY, "rel_pos", "n_slots",
-                                   "slot_keys")
-        else:
-            cands = windows.select(*CAND_KEY, "rel_pos", "n_slots",
-                                   hashed_slot_keys().alias("slot_keys"))
+    # (BENCH/BASELINE.md round-2 task-time-inflation analysis). The
+    # page-title subject is recomputed from url in codegen — cheaper than
+    # storing and re-reading it per scan.
+    cands = windows.withColumn(
+        "subject", capitalize_first(strip_name("url"))).select(
+        *CAND_KEY, "rel_pos", "n_slots", "slot_keys")
 
     def finalize(df: DataFrame) -> DataFrame:
-        """Post-threshold projection to the output schema; the int-url path
-        re-attaches url/subject here, so the string join touches only the
-        surviving rows."""
-        if int_url:
-            df = df.join(url_map, "url_id")
+        """Post-threshold projection to the output schema."""
         return df.select(
             F.col("subject").alias("subj"),
             "pred",
@@ -272,16 +222,7 @@ def score_candidates(
         # a critical path that two overlapped per-side jobs hide (guide
         # §2.6 back-filling); per-side fusion keeps the overlap AND the
         # shorter chains. ----
-        if int_url:
-            # subject entities come from the url dimension (a superset of
-            # candidate subjects — extra rows never match), and the side
-            # table is re-keyed to url_id so the candidate join hashes an
-            # 8-byte key instead of the subject string
-            sub_ents = url_map.select(
-                F.col("subject").alias("entity")).distinct()
-        else:
-            sub_ents = cands.select(
-                F.col("subject").alias("entity")).distinct()
+        sub_ents = cands.select(F.col("subject").alias("entity")).distinct()
         obj_ents = cands.select(F.col("object").alias("entity")).distinct()
 
         def side_scores(ents: DataFrame, side: str) -> DataFrame:
@@ -312,17 +253,8 @@ def score_candidates(
                 tbl = F.broadcast(tbl)
             return tbl
 
-        if int_url:
-            sub_tbl = (
-                side_scores(sub_ents, "subject")
-                .join(url_map.select(
-                    "url_id", F.col("subject").alias("entity")), "entity")
-                .select("url_id", "pred", "subject_type_score"))
-            sub_key = "url_id"
-        else:
-            sub_tbl = side_scores(sub_ents, "subject") \
-                .withColumnRenamed("entity", "subject")
-            sub_key = "subject"
+        sub_tbl = side_scores(sub_ents, "subject") \
+            .withColumnRenamed("entity", "subject")
         obj_tbl = side_scores(obj_ents, "object") \
             .withColumnRenamed("entity", "object")
 
@@ -338,7 +270,7 @@ def score_candidates(
             sub_done, obj_done = f_sub.result(), f_obj.result()
 
         scored = (
-            cands.join(sub_done, sub_key)
+            cands.join(sub_done, "subject")
             .join(obj_done, ["object", "pred"])
         )
     else:

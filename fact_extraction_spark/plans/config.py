@@ -5,16 +5,13 @@ Reproduces the reference's only user-facing configuration surface
 config-default.ini): a missing ``config.ini`` is generated from the default
 file, then every engine knob is read from its section.
 
-Fixed reference bug (documented in SURVEY §7.1): the reference reads the
-``perform_tests`` flag from the ``randomize`` key
-(wikipedia_pattern_extractor.py:58) — this loader reads ``perform_tests``
-from its own key.
-
-Keys with no engine counterpart are parsed and surfaced but inert:
-``threads`` (Spark parallelism is session/cluster config, not pipeline
-config), ``randomize`` (the engine is deterministic by design — documented
+Keys with no engine counterpart are accepted and ignored: ``threads``
+(Spark parallelism is session/cluster config, not pipeline config),
+``randomize`` (the engine is deterministic by design — documented
 divergence, SURVEY §4), ``use_dump`` (the corpus is always the input
-table).
+table), ``perform_tests`` (the reference's invariant asserts guard a
+pattern TREE, pattern.py:144-155; the monoid groupBy merge has no tree to
+validate).
 """
 
 from __future__ import annotations
@@ -62,9 +59,6 @@ def load_config(path: str, default_path: str = _DEFAULT_INI,
             cfg["facts_limit"] = s.getint("facts_limit")
         if "relation_types_limit" in s:
             cfg["relation_types_limit"] = s.getint("relation_types_limit")
-        if "perform_tests" in s:
-            # the reference reads key 'randomize' here — fixed
-            cfg["perform_tests"] = s.getboolean("perform_tests")
 
     if p.has_section("pattern_cleaner"):
         s = p["pattern_cleaner"]

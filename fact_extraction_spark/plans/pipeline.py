@@ -42,7 +42,9 @@ from fact_extraction_spark.operators.mentions import (
     fused_sentence_hits_and_anchors, hot_hits, resolve_redirects,
     split_alias_dictionary,
 )
-from fact_extraction_spark.operators.scoring import score_candidates
+from fact_extraction_spark.operators.scoring import (
+    score_candidates, slim_score_windows,
+)
 from fact_extraction_spark.operators.type_patterns import learn_type_patterns
 
 logger = logging.getLogger(__name__)
@@ -51,7 +53,6 @@ logger = logging.getLogger(__name__)
 _CHOICES = {
     "mention_mode": ("anchors", "dictionary"),
     "dictionary_strategy": ("auto", "broadcast", "mapside"),
-    "training_join_strategy": ("auto", "broadcast", "salted"),
 }
 
 
@@ -89,8 +90,8 @@ class PipelineConfig:
     max_profile_words: int = 64
     # Dictionary-mode detection strategy:
     # "auto" (default) — count the (alias, entity) pairs (one agg over a
-    #   dimension table) and pick: "broadcast" under
-    #   ``dictionary_auto_threshold`` pairs (mapside's two extra shuffles
+    #   dimension table) and pick: "broadcast" up to
+    #   ``DICTIONARY_BROADCAST_PAIRS`` pairs (mapside's two extra shuffles
     #   are pure overhead on a small dictionary), "mapside" above.
     # "mapside" — bounded hot-head automaton broadcast + relational
     #   n-gram join against the long-tail alias table; the full dictionary is
@@ -99,7 +100,6 @@ class PipelineConfig:
     # "broadcast" — collect the whole dictionary into one automaton; fastest
     #   when the dictionary is known-small (tests, bounded domains).
     dictionary_strategy: str = "auto"
-    dictionary_auto_threshold: int = 200_000   # pairs; "auto" switch point
     # Dictionary mode only: also scan sentences WITHOUT any anchor link.
     # The reference-parity keeps-a-link sentence filter
     # (tagged_sentence.py:156,167-173) makes sense for anchor-supervised
@@ -116,44 +116,13 @@ class PipelineConfig:
     # never cross Arrow, never enter the sentence persist and never reach
     # the n-gram explode. Semantics-neutral (every downstream consumer
     # filters on one of the three); in mapside mode it needs the tail's
-    # first-token set broadcast, gated by
-    # dictionary_first_token_broadcast_rows (the set is orders of magnitude
-    # smaller than the dictionary — aliases share first tokens — and the
-    # old posexplode path broadcast the very same set for its semi-join).
+    # first-token set broadcast, gated by collect_tail_broadcasts' row
+    # bound (the set is orders of magnitude smaller than the dictionary —
+    # aliases share first tokens — and the old posexplode path broadcast
+    # the very same set for its semi-join).
     dictionary_prune_sentences: bool = True
-    dictionary_first_token_broadcast_rows: int = 2_000_000
-    # windows⋈training-facts join strategy (SURVEY north star "salted joins
-    # + AQE"): "broadcast" (the capped fact table is small), "salted" for
-    # uncapped fact sets too big to broadcast — routes mega-entity keys
-    # (>= salt_hot_min_count window rows) through the explicit skew-split
-    # salted join while the tail shuffle-joins plainly — or "auto"
-    # (default), which mirrors the dictionary auto switch: ONE count over
-    # the already-cached capped fact table picks broadcast below
-    # training_join_auto_threshold rows and salted above it. AQE skew-join
-    # (on in session.py) remains the runtime backstop either way.
-    training_join_strategy: str = "auto"
-    # rows; ~(subj,pred,obj) triples broadcast comfortably well past 10^6 —
-    # at 2M short-string rows the broadcast is O(100 MB), still cheaper
-    # than shuffling a corpus-sized window table
-    training_join_auto_threshold: int = 2_000_000
-    salt_hot_min_count: int = 100_000
-    # discovery gating (select_discovery_pages): max size of the EXCLUDED
-    # title set (training subjects ∪ gate-failing typed entities) for the
-    # broadcast anti-join strategy that keeps the html-bearing pages table
-    # out of every exchange; above it, the slim semi-join fallback runs
-    discovery_exclude_broadcast_rows: int = 2_000_000
-    # int-url scoring persist (VERDICT r5 Next #3): hash-encode the url
-    # through the slim scoring persist (SLIM_KEY_INT) and re-attach
-    # url/subject after the threshold filter via the url dimension. The
-    # next bytes-per-candidate lever after the slot-word hashing; gated
-    # behind a flag for the measured A/B on the scale corpus.
-    scoring_int_url: bool = False
     # config-default.ini:19 — 0 means learn type patterns over ALL facts
     type_learner_facts_limit: int = 0
-    # config-default.ini:8; the reference's invariant asserts guard a
-    # pattern TREE (pattern.py:144-155) — the monoid groupBy merge has no
-    # tree to validate, so the flag is parsed for parity but inert
-    perform_tests: bool = False
     # Canonicalize triple subjects/objects through the connected-components
     # alias graph (redirects + capitalize variants) before the sink —
     # SURVEY §3.3 step 6 / §7.1 last box. Off by default: anchors-mode
@@ -207,6 +176,10 @@ class LearnedModel:
         return self
 
 
+# dictionary_strategy="auto" switch point, in (alias, entity) pairs
+DICTIONARY_BROADCAST_PAIRS = 200_000
+
+
 def _build_dict_ctx(spark: SparkSession, pages: DataFrame,
                     redirects: DataFrame, cfg: "PipelineConfig",
                     extras: dict | None = None) -> dict:
@@ -225,10 +198,8 @@ def _build_dict_ctx(spark: SparkSession, pages: DataFrame,
     dropped them."""
     ctx_key = None
     if extras is not None:
-        ctx_key = ("dict_ctx", cfg.dictionary_strategy,
-                   cfg.dictionary_auto_threshold, cfg.dictionary_hot_k,
-                   cfg.max_tail_tokens, cfg.dictionary_prune_sentences,
-                   cfg.dictionary_first_token_broadcast_rows)
+        ctx_key = ("dict_ctx", cfg.dictionary_strategy, cfg.dictionary_hot_k,
+                   cfg.max_tail_tokens, cfg.dictionary_prune_sentences)
         cached = extras.get(ctx_key)
         if (cached is not None and cached[1] is pages
                 and cached[2] is redirects):
@@ -271,7 +242,7 @@ def _build_dict_ctx(spark: SparkSession, pages: DataFrame,
         # explode + two joins are pure overhead); above it the bounded-head
         # mapside path is the only sane shape
         n_pairs = cands.count()
-        strategy = ("broadcast" if n_pairs <= cfg.dictionary_auto_threshold
+        strategy = ("broadcast" if n_pairs <= DICTIONARY_BROADCAST_PAIRS
                     else "mapside")
         logger.info("dictionary_strategy=auto: %d alias pairs -> %s",
                     n_pairs, strategy)
@@ -306,9 +277,7 @@ def _build_dict_ctx(spark: SparkSession, pages: DataFrame,
     # join then falls back to posexplode + semi-join / ungated scanning
     ft_bc = wit_bc = tail_known_empty = None
     if cfg.dictionary_prune_sentences:
-        bound = cfg.dictionary_first_token_broadcast_rows
-        ft_bc, wit_bc, tail_known_empty = collect_tail_broadcasts(
-            tail_keyed, bound)
+        ft_bc, wit_bc, tail_known_empty = collect_tail_broadcasts(tail_keyed)
     ctx = {"mode": "mapside", "head_bc": head_bc, "ambiguous": ambiguous,
            "tail": tail_keyed, "first_tok_bc": ft_bc, "witness_bc": wit_bc,
            # probed once at build; spares every extract _mapside_union's
@@ -391,6 +360,13 @@ def _page_mentions(pages: DataFrame, redirect_map_bc, lang: str | None,
         F.col("entity") != capitalize_first(strip_name("url")))
 
 
+# windows⋈training-facts join switch point, in capped fact rows:
+# ~(subj,pred,obj) triples broadcast comfortably well past 10^6 — at 2M
+# short-string rows the broadcast is O(100 MB), still cheaper than
+# shuffling a corpus-sized window table
+TRAINING_JOIN_BROADCAST_ROWS = 2_000_000
+
+
 def learn(
     spark: SparkSession,
     pages: DataFrame,
@@ -444,22 +420,22 @@ def learn(
     # capped extract, VERDICT r2 #3) — one count() materializes it once.
     track(windows).count()
 
-    join_strategy = cfg.training_join_strategy
-    if join_strategy == "auto":
-        # one count over the already-cached capped fact table decides;
-        # mirrors the dictionary auto switch (_build_dict_ctx)
-        n_facts = training_facts.count()
-        join_strategy = ("broadcast"
-                         if n_facts <= cfg.training_join_auto_threshold
-                         else "salted")
-        logger.info("training_join_strategy=auto: %d capped facts -> %s",
-                    n_facts, join_strategy)
+    # windows⋈training-facts join (SURVEY north star "salted joins + AQE"):
+    # one count over the already-cached capped fact table picks broadcast
+    # for a small fact set, or the explicit skew-split salted join for one
+    # too big to broadcast, which routes mega-entity keys through salting
+    # while the tail shuffle-joins plainly. AQE skew-join (on in
+    # session.py) remains the runtime backstop either way.
+    n_facts = training_facts.count()
+    join_strategy = ("broadcast" if n_facts <= TRAINING_JOIN_BROADCAST_ROWS
+                     else "salted")
+    logger.info("training join: %d capped facts -> %s", n_facts,
+                join_strategy)
     learned = learn_lexical_patterns(
         windows, training_facts, types,
         least_threshold_words=cfg.least_threshold_words,
         least_threshold_types=cfg.least_threshold_types,
         join_strategy=join_strategy,
-        salt_hot_min_count=cfg.salt_hot_min_count,
     )
     # type patterns are learned over the full fact set by default, as the
     # type_learner does with facts_limit=0 (config-default.ini:19); a
@@ -485,6 +461,13 @@ def learn(
     ).cache()
 
 
+# max size of select_discovery_pages' EXCLUDED title set (training
+# subjects ∪ gate-failing typed entities) for the broadcast anti-join that
+# keeps the html-bearing pages table out of every exchange; above it, the
+# slim semi-join fallback runs
+DISCOVERY_EXCLUDE_BROADCAST_ROWS = 2_000_000
+
+
 def select_discovery_pages(
     pages: DataFrame,
     model: LearnedModel,
@@ -508,7 +491,7 @@ def select_discovery_pages(
     entities whose types miss the subject gate): html then never leaves
     its scan stage — the mapInPandas extraction fuses directly onto the
     parquet scan with zero page-table exchange. One dimension-side count
-    picks the strategy; above ``discovery_exclude_broadcast_rows`` (or with
+    picks the strategy; above ``DISCOVERY_EXCLUDE_BROADCAST_ROWS`` (or with
     ``articles_limit``, whose kept set is already a bounded broadcast) the
     original slim semi-join path runs instead. At 10^12 documents the
     right layout is pages bucketed by url so even that fallback semi-join
@@ -554,7 +537,7 @@ def select_discovery_pages(
             cached = (excluded, excluded.count(), types)
             model.extras[cache_key] = cached
         excluded, n_excluded = cached[0], cached[1]
-        if n_excluded <= cfg.discovery_exclude_broadcast_rows:
+        if n_excluded <= DISCOVERY_EXCLUDE_BROADCAST_ROWS:
             return (
                 pages.withColumn(
                     "title", capitalize_first(strip_name("url")))
@@ -612,7 +595,6 @@ def extract(
     # (slot words hash-encoded to int64, nested strings dropped) — scoring
     # is the only consumer and the job is memory-bandwidth-bound, so every
     # byte not in this table is a byte every scoring pass doesn't re-read.
-    from fact_extraction_spark.operators.scoring import slim_score_windows
     if cfg.mention_mode == "anchors":
         windows = fused_anchor_windows(
             discovery, redirect_map_bc, lang=cfg.lang,
@@ -624,15 +606,7 @@ def extract(
                                   dict_ctx, cfg)
         mentions = mentions.filter(~F.col("entity").contains("redlink=1"))
         windows = candidate_windows(mentions, window=cfg.window)
-    url_map = None
-    if cfg.scoring_int_url:
-        # url dimension (url_id, url, subject) from the column-pruned
-        # discovery scan; persisted — consumed by the subject side-table
-        # build and the post-threshold string re-attach
-        from fact_extraction_spark.operators.scoring import url_dim
-        url_map = track(url_dim(discovery).persist())
-    windows = slim_score_windows(
-        windows, int_url=cfg.scoring_int_url).persist()
+    windows = slim_score_windows(windows).persist()
     # EAGER stage boundary (VERDICT r2 #3): score_candidates submits several
     # stages over ``windows`` concurrently; if the persist is still lazy,
     # each finds the cache unfilled and re-runs the full html→windows chain
@@ -647,7 +621,6 @@ def extract(
         allow_unknown_entity_types=cfg.allow_unknown_entity_types,
         match_threshold=cfg.match_threshold,
         type_matching=cfg.type_matching,
-        url_map=url_map,
     )
     if known_facts is not None:
         # new-fact subtraction (pattern_recognition/fact_cleaner.py:15-25)

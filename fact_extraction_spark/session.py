@@ -16,6 +16,22 @@ from pyspark.sql import SparkSession
 ARROW_MAX_RECORDS_PER_BATCH = 2048
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` for this host: ``$SPARK_DRIVER_MEM`` when
+    set, else a heap derived from MemTotal. In local mode the driver IS the
+    executor, so it takes a quarter of the host, and never so much that the
+    OS, the host's other tenants and one Python worker per core (about
+    512 MB each) lose their share."""
+    override = os.environ.get("SPARK_DRIVER_MEM")
+    if override:
+        return override
+    with open(meminfo) as f:
+        total_mb = next(int(line.split()[1]) // 1024 for line in f
+                        if line.startswith("MemTotal:"))
+    cpus = len(os.sched_getaffinity(0))
+    return f"{max(1024, min(total_mb // 4, total_mb - 2048 - 512 * cpus))}m"
+
+
 def get_spark(
     app_name: str = "fact_extraction_spark",
     master: str | None = None,
@@ -68,11 +84,10 @@ def get_spark(
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         "spark.sql.session.timeZone": "UTC",
         # In local mode the driver IS the executor: all task threads share
-        # this one heap with the DataFrame cache. 8g measurably GC-thrashes
-        # at local[16+] on corpus-scale runs ("GCLocker retried" warnings,
-        # 1.3x task-time inflation); on a real cluster this is
-        # spark-submit's --executor-memory and the driver stays small.
-        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "32g"),
+        # this one heap with the DataFrame cache, sized to the host; on a
+        # real cluster this is spark-submit's --executor-memory and the
+        # driver stays small.
+        "spark.driver.memory": default_driver_memory(),
         "spark.ui.enabled": "false",
         "spark.executorEnv.PYTHONPATH": os.environ["PYTHONPATH"],
     }

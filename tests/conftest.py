@@ -1,7 +1,5 @@
 from __future__ import annotations
 
-import os
-
 import pytest
 
 
@@ -14,14 +12,10 @@ from fact_extraction_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    # the engine's default driver heap (32g) is sized for a large host; the
-    # test corpus needs a small fraction of it, and on a 16 GB host the
-    # default lets the JVM grow until the kernel kills it mid-suite
-    os.environ.setdefault("SPARK_DRIVER_MEM", "4g")
     # every action renders its physical plan as text for the SQL status
     # store; cached subplans repeat in full at each reference, so one
-    # dictionary-mode extract renders ~160 MB and a few of them exhaust
-    # that heap — cap the rendered text
+    # dictionary-mode extract renders ~160 MB and a few of them exhaust a
+    # host-sized heap — cap the rendered text
     s = get_spark("fact_extraction_spark_tests", master="local[4]",
                   shuffle_partitions=8,
                   extra_conf={"spark.sql.maxPlanStringLength": str(1 << 20)})

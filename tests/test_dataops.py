@@ -1,4 +1,4 @@
-"""Training-data pipeline operators: dedup, similarity, quality, multimodal."""
+"""Training-data pipeline operators: dedup, similarity, quality."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -121,54 +121,6 @@ def test_rolling_fingerprint_matches_for_dups(docs):
           for r in rolling_fingerprints(docs).collect()}
     assert fp[0] == fp[3]
     assert fp[0] != fp[2]
-
-
-# ---------------------------------------------------------------------------
-# multimodal plumbing
-# ---------------------------------------------------------------------------
-
-@pytest.fixture(scope="module")
-def media(spark):
-    from fact_extraction_spark.dataops.multimodal import MEDIA_DDL
-    rows = [
-        (1, "image", b"\x89PNGfake", (64, 48, None, None, "image/png")),
-        (2, "image", b"\x89PNGother", (640, 480, None, None, "image/png")),
-        (3, "audio", b"RIFFfake", (None, None, 16000, None, "audio/wav")),
-        (4, "video", b"\x00mp4fake", (1920, 1080, None, 25, "video/mp4")),
-    ]
-    return spark.createDataFrame(rows, MEDIA_DDL).repartition(2).cache()
-
-
-def test_feature_extraction_fake_is_deterministic(media):
-    from fact_extraction_spark.dataops.multimodal import (
-        FEATURE_DIM, extract_features)
-    a = {r["media_id"]: r["feature"] for r in extract_features(media).collect()}
-    b = {r["media_id"]: r["feature"] for r in extract_features(media).collect()}
-    assert a == b
-    assert all(len(v) == FEATURE_DIM for v in a.values())
-    assert a[1] != a[2]
-
-
-def test_feature_extraction_real_raises(media):
-    from fact_extraction_spark.dataops.multimodal import extract_features
-    with pytest.raises(Exception, match="NotImplementedError|codec"):
-        extract_features(media, decode="real").collect()
-
-
-def test_resize_and_frame_sampling(media):
-    from fact_extraction_spark.dataops.multimodal import (
-        resize_images, sample_frames)
-    resized = resize_images(media, 32, 32).collect()
-    assert {r["media_id"] for r in resized} == {1, 2}
-    assert all(r["width"] == 32 for r in resized)
-    frames = sample_frames(media, every_n=10).collect()
-    assert [r["frame_idx"] for r in frames] == [0, 10, 20]
-
-
-def test_media_stats(media):
-    from fact_extraction_spark.dataops.multimodal import media_stats
-    stats = {r["kind"]: r["n"] for r in media_stats(media).collect()}
-    assert stats == {"image": 2, "audio": 1, "video": 1}
 
 
 # ---------------------------------------------------------------------------

@@ -127,25 +127,6 @@ def test_discovery_excluded_cache_keyed_per_types_table(
     assert len(model.extras) == n_entries_before
 
 
-def test_scoring_int_url_equivalence(spark, tables, model_and_triples):
-    """scoring_int_url=True (SLIM_KEY_INT: url hash-encoded through the
-    scoring persist, strings re-attached post-threshold) must be
-    row-identical to the default string-keyed path — same triples, same
-    scores, same evidence columns."""
-    model, base = model_and_triples
-    cfg = PipelineConfig(articles_limit=0, scoring_int_url=True)
-    got = extract(spark, tables["pages"], model, tables["types"],
-                  tables["redirects"], cfg)
-
-    def rows(df):
-        return {(r["subj"], r["pred"], r["obj"], round(r["score"], 9),
-                 r["url"], r["sent_id"], round(r["rel_pos"], 9))
-                for r in df.collect()}
-
-    got_rows = rows(got)
-    assert got_rows and got_rows == rows(base)
-
-
 def test_redirect_alias_objects_resolved(model_and_triples, tables):
     _, triples = model_and_triples
     objs = {r["obj"] for r in triples.select("obj").distinct().collect()}

@@ -197,21 +197,20 @@ def test_mapside_dictionary_detection_equals_broadcast(spark, tables):
     assert all(r["tokens"] for r in got_rows)
 
 
-def test_dictionary_strategy_auto_switch(spark, tables):
-    """dictionary_strategy="auto" picks broadcast under the pair-count
-    threshold (mapside's extra shuffles are pure overhead on a small
-    dictionary) and mapside above it."""
-    from fact_extraction_spark.plans.pipeline import (
-        PipelineConfig, _build_dict_ctx)
+def test_dictionary_strategy_auto_switch(spark, tables, monkeypatch):
+    """dictionary_strategy="auto" picks broadcast up to
+    DICTIONARY_BROADCAST_PAIRS alias pairs (mapside's extra shuffles are
+    pure overhead on a small dictionary) and mapside above it."""
+    from fact_extraction_spark.plans import pipeline
 
-    small = PipelineConfig(dictionary_strategy="auto",
-                           dictionary_auto_threshold=1_000_000)
-    ctx = _build_dict_ctx(spark, tables["pages"], tables["redirects"], small)
+    cfg = pipeline.PipelineConfig(dictionary_strategy="auto")
+    ctx = pipeline._build_dict_ctx(
+        spark, tables["pages"], tables["redirects"], cfg)
     assert ctx["mode"] == "broadcast"
 
-    big = PipelineConfig(dictionary_strategy="auto",
-                         dictionary_auto_threshold=0)
-    ctx2 = _build_dict_ctx(spark, tables["pages"], tables["redirects"], big)
+    monkeypatch.setattr(pipeline, "DICTIONARY_BROADCAST_PAIRS", 0)
+    ctx2 = pipeline._build_dict_ctx(
+        spark, tables["pages"], tables["redirects"], cfg)
     assert ctx2["mode"] == "mapside"
     ctx2["tail"].unpersist()
 

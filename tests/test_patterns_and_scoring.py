@@ -6,7 +6,9 @@ from pyspark.sql import functions as F
 from fact_extraction_spark.operators.lexical_patterns import (
     candidate_windows, cap_training_facts, learn_lexical_patterns,
 )
-from fact_extraction_spark.operators.scoring import score_candidates
+from fact_extraction_spark.operators.scoring import (
+    score_candidates, slim_score_windows,
+)
 
 MENTIONS_DDL = ("url string, sent_id int, rel_pos double, "
                 "tokens array<string>, start int, end int, entity string")
@@ -65,8 +67,9 @@ def test_learn_patterns_merge_is_groupby(spark, tiny_mentions):
 
 
 def test_salted_training_join_matches_broadcast(spark, tiny_mentions):
-    # the salted skew-split path (training_join_strategy="salted") must be
-    # row-identical to the broadcast join across every learned table —
+    # the salted skew-split path (learn's pick for fact sets too big to
+    # broadcast) must be row-identical to the broadcast join across every
+    # learned table —
     # salt_hot_min_count=1 forces EVERY key through the salted (hot) branch
     # so both the salted and the plain-cold legs are exercised
     facts = spark.createDataFrame(
@@ -88,27 +91,36 @@ def test_salted_training_join_matches_broadcast(spark, tiny_mentions):
             assert a == b, (tbl, min_count)
 
 
-def test_training_join_auto_picks_by_fact_count(spark, tables):
-    # "auto" (the default) mirrors the dictionary auto switch: broadcast
-    # below training_join_auto_threshold capped facts, salted above it —
-    # and the two legs must learn identical pattern tables
-    from fact_extraction_spark.plans.pipeline import PipelineConfig, learn
+def test_training_join_auto_picks_by_fact_count(spark, tables, monkeypatch):
+    # learn() picks the join from the capped fact count: broadcast up to
+    # TRAINING_JOIN_BROADCAST_ROWS, salted above it — and the two legs must
+    # learn identical pattern tables
+    from fact_extraction_spark.operators import lexical_patterns
+    from fact_extraction_spark.plans import pipeline
 
-    def model_words(cfg):
-        m = learn(spark, tables["pages"], tables["facts"], tables["types"],
-                  tables["redirects"], cfg)
+    picked = []
+    real = lexical_patterns.learn_lexical_patterns
+
+    def spy(*args, join_strategy, **kwargs):
+        picked.append(join_strategy)
+        return real(*args, join_strategy=join_strategy, **kwargs)
+    monkeypatch.setattr(pipeline, "learn_lexical_patterns", spy)
+
+    def model_words():
+        m = pipeline.learn(spark, tables["pages"], tables["facts"],
+                           tables["types"], tables["redirects"])
         rows = sorted(map(tuple, m.pattern_words.collect()))
         m.unpersist()
         return rows
 
-    # threshold 0 -> every fact set is "too big": auto takes the salted leg
-    salted_auto = model_words(PipelineConfig(
-        training_join_strategy="auto", training_join_auto_threshold=0))
-    # default threshold -> the capped fixture facts broadcast
-    broadcast_auto = model_words(PipelineConfig(
-        training_join_strategy="auto"))
-    assert salted_auto == broadcast_auto
-    assert len(salted_auto) > 0
+    # the capped fixture facts broadcast
+    broadcast_rows = model_words()
+    # bound 0 -> every fact set is "too big": learn takes the salted leg
+    monkeypatch.setattr(pipeline, "TRAINING_JOIN_BROADCAST_ROWS", 0)
+    salted_rows = model_words()
+    assert picked == ["broadcast", "salted"]
+    assert salted_rows == broadcast_rows
+    assert len(salted_rows) > 0
 
 
 def test_scoring_separates_true_match_from_distractor(spark, tiny_mentions):
@@ -130,7 +142,7 @@ def test_scoring_separates_true_match_from_distractor(spark, tiny_mentions):
         _mention("Dora", 0, 0.0, "Dora was born in Oslo .", "Oslo", 4, 4),
         _mention("Carl", 0, 0.5, "Carl once visited Oslo happily .", "Oslo", 3, 3),
     ], MENTIONS_DDL)
-    cw = candidate_windows(cand, window=2)
+    cw = slim_score_windows(candidate_windows(cand, window=2))
     scored = score_candidates(
         cw, learned["pattern_words"], learned["pattern_stats"],
         learned["pattern_types"], type_probs, rel_stats, types,
@@ -166,7 +178,7 @@ def test_unknown_types_renormalize_weights(spark, tiny_mentions):
     cand = spark.createDataFrame([
         _mention("Eve", 0, 0.0, "Eve was born in Oslo .", "Oslo", 4, 4),
     ], MENTIONS_DDL)
-    cw = candidate_windows(cand, window=2)
+    cw = slim_score_windows(candidate_windows(cand, window=2))
     scored = score_candidates(
         cw, learned["pattern_words"], learned["pattern_stats"],
         learned["pattern_types"], type_probs, rel_stats, types,
@@ -246,7 +258,7 @@ def test_type_matching_disabled_scores_syntax_only(spark, tiny_mentions):
         # scored anyway, even with allow_unknown_entity_types=False
         _mention("Eve", 0, 0.0, "Eve was born in Oslo .", "Oslo", 4, 4),
     ], MENTIONS_DDL)
-    cw = candidate_windows(cand, window=2)
+    cw = slim_score_windows(candidate_windows(cand, window=2))
     scored = score_candidates(
         cw, learned["pattern_words"], learned["pattern_stats"],
         learned["pattern_types"], type_probs, rel_stats, types,
@@ -281,7 +293,7 @@ def test_side_broadcast_threshold_is_plan_only(spark, tiny_mentions):
         _mention("Eve", 0, 0.0, "Eve was born in Oslo .", "Oslo", 4, 4),
         _mention("Carl", 0, 0.5, "Carl once visited Oslo happily .", "Oslo", 3, 3),
     ], MENTIONS_DDL)
-    cw = candidate_windows(cand, window=2)
+    cw = slim_score_windows(candidate_windows(cand, window=2))
     outs = []
     for rows_thr in (5_000_000, 0):
         scored = score_candidates(
