@@ -28,11 +28,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fact_extraction_spark.caches import track
 from fact_extraction_spark.functions.uri import capitalize_first, strip_name
 
 RELATIVE_POSITION_WEIGHT = 0.15  # pattern_matcher.py:45
 SYNTAX_WEIGHT = 1.0              # pattern_matcher.py:46
 DEFAULT_MATCH_THRESHOLD = 0.005  # fact_extractor.py:18 (config default 0.5)
+# largest type-score side table the scorer broadcasts (rows); above it the
+# candidate table shuffle-joins the side table
+SIDE_BROADCAST_ROWS = 5_000_000
 
 CAND_KEY = ["url", "sent_id", "subject", "object"]
 # the slim persist's key columns: ``subject`` is ALWAYS the page title —
@@ -163,7 +167,6 @@ def score_candidates(
     allow_unknown_entity_types: bool = True,
     match_threshold: float = DEFAULT_MATCH_THRESHOLD,
     type_matching: bool = True,
-    side_broadcast_rows: int = 5_000_000,
 ) -> DataFrame:
     """slim windows (``slim_score_windows``) → scored (subj, pred, obj,
     score, …).
@@ -203,75 +206,39 @@ def score_candidates(
             "url", "sent_id", "rel_pos",
         )
 
-    n_types = types.groupBy("entity").agg(F.count("*").alias("n_types"))
-
     if type_matching:
-        from fact_extraction_spark.caches import track
-        # n_types feeds the fused typed join + the unknown anti-join;
-        # persist + eager fill so the small aggregation over the types
-        # table runs once instead of once per reference
-        n_types = track(n_types.persist())
-        n_types.count()
-        # ---- reasonable-relations gate + type score + early exit, one
-        # fused traversal PER SIDE (fused_side_scores): the gate+prob
-        # union-dim aggregation replaces the former gate-pairs distinct +
-        # prob groupBy + left-join chain (two types traversals and two
-        # extra shuffles per side). The two sides stay CONCURRENT — an
-        # A/B of a single both-sides job measured 2 s SLOWER at the bench
-        # shape despite less total work, because one fused job serializes
-        # a critical path that two overlapped per-side jobs hide (guide
-        # §2.6 back-filling); per-side fusion keeps the overlap AND the
-        # shorter chains. ----
-        sub_ents = cands.select(F.col("subject").alias("entity")).distinct()
-        obj_ents = cands.select(F.col("object").alias("entity")).distinct()
+        # ---- reasonable-relations gate + type score + early exit, both
+        # sides in ONE side table: the candidates' labelled (entity, side)
+        # set goes through fused_side_scores (one ``types`` traversal) and
+        # the two joins split it by the label ("Joins over UNION ALL
+        # Queries", SIGMOD 2018). Traced thin_anchored extract on a 4-core
+        # host: 37 scoring jobs with the former concurrent per-side builds,
+        # 23 with this one. ----
+        ents_both = (
+            cands.select(F.col("subject").alias("entity"),
+                         F.lit("subject").alias("side"))
+            .unionByName(cands.select(F.col("object").alias("entity"),
+                                      F.lit("object").alias("side")))
+            .distinct())
+        n_types = types.groupBy("entity").agg(F.count("*").alias("n_types"))
+        sides = track(fused_side_scores(
+            types, pattern_types, type_probs, pattern_stats, n_types,
+            ents_both, allow_unknown_entity_types).persist())
+        # the side table (candidate entities × admissible preds) sits behind
+        # aggregates whose size Catalyst cannot estimate, so measure it once:
+        # a broadcast keeps the corpus-sized candidate table from shuffling
+        small = sides.count() <= SIDE_BROADCAST_ROWS
 
-        def side_scores(ents: DataFrame, side: str) -> DataFrame:
-            """(entity, {side}_type_score, pred) over the given candidate-
-            side entity set (one "entity" column)."""
-            return (fused_side_scores(
-                types,
-                pattern_types.filter(F.col("side") == side),
-                type_probs.filter(F.col("side") == side),
-                pattern_stats, n_types,
-                ents.withColumn("side", F.lit(side)),
-                allow_unknown_entity_types)
-                .drop("side")
-                .withColumnRenamed("type_score", f"{side}_type_score"))
-
-        def finish_side(tbl: DataFrame) -> DataFrame:
-            # The side table is bounded (candidate entities × admissible
-            # preds) but sits behind aggregates/unions whose size estimates
-            # Catalyst distrusts, so it plans a shuffle join — exchanging
-            # the corpus-sized candidate table both ways. Measure the real
-            # row count (one job over a dimension table) and broadcast when
-            # it is small enough: the candidate table then never shuffles
-            # and the whole scan→join→score pipeline stays in one
-            # whole-stage-codegen pass.
-            from fact_extraction_spark.caches import track
-            tbl = track(tbl.persist())
-            if tbl.count() <= side_broadcast_rows:
-                tbl = F.broadcast(tbl)
-            return tbl
-
-        sub_tbl = side_scores(sub_ents, "subject") \
-            .withColumnRenamed("entity", "subject")
-        obj_tbl = side_scores(obj_ents, "object") \
-            .withColumnRenamed("entity", "object")
-
-        # the two side-table materializations are independent multi-stage
-        # jobs over dimension tables whose wall time is stage-count
-        # overhead, not bytes — submit them concurrently so one side's
-        # stages back-fill the other's stragglers (guide §2.6; job
-        # descriptions are thread-local so the UI stays labelled)
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_sub = pool.submit(finish_side, sub_tbl)
-            f_obj = pool.submit(finish_side, obj_tbl)
-            sub_done, obj_done = f_sub.result(), f_obj.result()
+        def side_table(side: str) -> DataFrame:
+            """(side-named entity, pred, {side}_type_score) projection."""
+            tbl = sides.filter(F.col("side") == side).select(
+                F.col("entity").alias(side), "pred",
+                F.col("type_score").alias(f"{side}_type_score"))
+            return F.broadcast(tbl) if small else tbl
 
         scored = (
-            cands.join(sub_done, "subject")
-            .join(obj_done, ["object", "pred"])
+            cands.join(side_table("subject"), "subject")
+            .join(side_table("object"), ["object", "pred"])
         )
     else:
         # reasonable_relations = ALL learned relations
@@ -301,8 +268,6 @@ def score_candidates(
         return finalize(
             scored.withColumn("score", F.col("syntax_score"))
             .filter(F.col("score") >= match_threshold))
-
-    # (type scores + early exit already attached by the fused side joins)
 
     # ---- position score ----
     pos = (F.lit(1.0) - F.abs(F.col("relative_position") - F.col("rel_pos"))) ** 2

@@ -131,11 +131,6 @@ class PipelineConfig:
     # corpus contains alias-titled pages (subjects) or multi-step chains the
     # per-mention pass missed.
     canonicalize_output: bool = False
-    # Global score ordering of the extract output is presentation-layer work
-    # (the reference sorts once at print time, fact_extractor.py:208): at
-    # corpus scale a full sort is an extra all-to-all Exchange of the result,
-    # so the hot path leaves it off and sinks do sortWithinPartitions.
-    sort_output: bool = False
 
     def __post_init__(self):
         for name, allowed in _CHOICES.items():
@@ -395,10 +390,12 @@ def learn(
     train_pages = pages.join(train_urls, "url", "left_semi")
 
     redirect_map_bc = collect_redirect_map(spark, redirects)
+    extras = {"redirect_map_bc": redirect_map_bc}
     dict_ctx = None
     if cfg.mention_mode == "dictionary":
-        dict_ctx = _build_dict_ctx(spark, pages, redirects, cfg)
-    extras = {"redirect_map_bc": redirect_map_bc, "dict_ctx": dict_ctx}
+        # memoized in the model's extras under its (pages, redirects, knobs)
+        # key: an extract over the same tables reuses it, any other rebuilds
+        dict_ctx = _build_dict_ctx(spark, pages, redirects, cfg, extras=extras)
     # windows feed several downstream aggregates (pattern words / stats /
     # types); persist so the UDF chain runs once, not once per model table.
     # Anchors mode takes the single-pass nested-row path (html → candidate
@@ -574,12 +571,10 @@ def extract(
 ) -> DataFrame:
     """Run extraction over discovery pages → triples with evidence.
 
-    Output: (subj, pred, obj, score, url, sent_id, rel_pos). With
-    ``cfg.sort_output`` the result is globally ordered by score desc (the
-    intent of fact_extractor.py:208 — the reference line sorts by the
-    subject's 4th character, a documented bug we fix); by default ordering
-    is left to the presentation/export layer so the hot path has no global
-    Exchange for a sort nobody consumes.
+    Output: (subj, pred, obj, score, url, sent_id, rel_pos), unordered.
+    Ordering is the caller's, as in the reference, which sorts once at
+    print time (fact_extractor.py:208): a global sort here would add an
+    all-to-all Exchange of the result that no sink needs.
     """
     cfg = cfg or PipelineConfig()
     discovery = select_discovery_pages(pages, model, types, cfg)
@@ -600,8 +595,8 @@ def extract(
             discovery, redirect_map_bc, lang=cfg.lang,
             window=cfg.window, drop_redlinks=True)
     else:
-        dict_ctx = model.extras.get("dict_ctx") or _build_dict_ctx(
-            spark, pages, redirects, cfg, extras=model.extras)
+        dict_ctx = _build_dict_ctx(spark, pages, redirects, cfg,
+                                   extras=model.extras)
         mentions = _page_mentions(discovery, redirect_map_bc, cfg.lang,
                                   dict_ctx, cfg)
         mentions = mentions.filter(~F.col("entity").contains("redlink=1"))
@@ -647,6 +642,4 @@ def extract(
             titles.join(aliases, "name", "left_anti")).distinct()
         mapping = canonical_mapping(edges, preferred=preferred)
         scored = canonicalize_triples(scored, mapping)
-    if cfg.sort_output:
-        scored = scored.orderBy(F.desc("score"), "subj", "pred", "obj")
     return scored

@@ -274,9 +274,12 @@ def test_type_matching_disabled_scores_syntax_only(spark, tiny_mentions):
 
 
 @pytest.mark.slow
-def test_side_broadcast_threshold_is_plan_only(spark, tiny_mentions):
-    """side_broadcast_rows switches the side-table join between broadcast
+def test_side_broadcast_threshold_is_plan_only(spark, tiny_mentions,
+                                               monkeypatch):
+    """SIDE_BROADCAST_ROWS switches the side-table join between broadcast
     and shuffle — a physical-plan choice that must not change rows."""
+    from fact_extraction_spark.operators import scoring
+
     facts = spark.createDataFrame(
         [("Alice", "birthPlace", "Oslo"), ("Bob", "birthPlace", "Paris")],
         "subj string, pred string, obj string")
@@ -294,17 +297,74 @@ def test_side_broadcast_threshold_is_plan_only(spark, tiny_mentions):
         _mention("Carl", 0, 0.5, "Carl once visited Oslo happily .", "Oslo", 3, 3),
     ], MENTIONS_DDL)
     cw = slim_score_windows(candidate_windows(cand, window=2))
-    outs = []
-    for rows_thr in (5_000_000, 0):
+
+    def scored_rows():
         scored = score_candidates(
             cw, learned["pattern_words"], learned["pattern_stats"],
             learned["pattern_types"], type_probs, rel_stats, types,
-            allow_unknown_entity_types=True, match_threshold=0.0,
-            side_broadcast_rows=rows_thr)
-        outs.append(sorted(
-            (r["subj"], r["pred"], r["obj"], round(r["score"], 9))
-            for r in scored.collect()))
-    assert outs[0] == outs[1] and outs[0]
+            allow_unknown_entity_types=True, match_threshold=0.0)
+        return sorted((r["subj"], r["pred"], r["obj"], round(r["score"], 9))
+                      for r in scored.collect())
+
+    broadcast = scored_rows()
+    monkeypatch.setattr(scoring, "SIDE_BROADCAST_ROWS", 0)
+    shuffled = scored_rows()
+    assert broadcast == shuffled and broadcast
+
+
+def test_scorer_builds_one_side_table(spark, tiny_mentions):
+    """One score_candidates call persists ONE labelled side table for both
+    type sides, and each side's score reaches its own candidate: Nora is
+    the subject of one candidate and the object of another, and her
+    subject-side and object-side type scores differ."""
+    from fact_extraction_spark import caches
+
+    facts = spark.createDataFrame(
+        [("Alice", "birthPlace", "Oslo"), ("Bob", "birthPlace", "Paris")],
+        "subj string, pred string, obj string")
+    learn_types = spark.createDataFrame(
+        [("Alice", "Person"), ("Bob", "Person"),
+         ("Oslo", "City"), ("Paris", "City")],
+        "entity string, type string")
+    w = candidate_windows(tiny_mentions, window=2)
+    # gate: subject Person, object City; syntax 0.75 for "X was born in Y ."
+    learned = learn_lexical_patterns(w, facts, learn_types,
+                                     least_threshold_words=2)
+    type_probs = spark.createDataFrame(
+        [("subject", "birthPlace", "Person", 0.8),
+         ("object", "birthPlace", "City", 0.6)],
+        "side string, pred string, type string, probability double")
+    rel_stats = spark.createDataFrame(
+        [("birthPlace", 0.5, 0.25)],
+        "pred string, subject_weighted_probability double, "
+        "object_weighted_probability double")
+    types = spark.createDataFrame(
+        [("Nora", "Person"), ("Nora", "City"),
+         ("Dora", "Person"), ("Oslo", "City")],
+        "entity string, type string")
+    cand = spark.createDataFrame([
+        _mention("Nora", 0, 0.0, "Nora was born in Oslo .", "Oslo", 4, 4),
+        _mention("Dora", 0, 0.0, "Dora was born in Nora .", "Nora", 4, 4),
+    ], MENTIONS_DDL)
+    cw = slim_score_windows(candidate_windows(cand, window=2))
+
+    n_tracked = len(caches._TRACKED)
+    scored = score_candidates(
+        cw, learned["pattern_words"], learned["pattern_stats"],
+        learned["pattern_types"], type_probs, rel_stats, types,
+        allow_unknown_entity_types=True, match_threshold=0.0)
+    assert len(caches._TRACKED) - n_tracked == 1
+
+    rows = {(r["subj"], r["obj"]): r for r in scored.collect()}
+    assert set(rows) == {("Nora", "Oslo"), ("Dora", "Nora")}
+    # Nora (2 types): subject 0.8/2 = 0.4, object 0.6/2 = 0.3;
+    # Oslo object 0.6, Dora subject 0.8; position 1, syntax 0.75;
+    # weights [0.5, 0.25, 0.15, 1.0]
+    total_w = 0.5 + 0.25 + 0.15 + 1.0
+    exp_nora_subj = (0.4 * 0.5 + 0.6 * 0.25 + 0.15 + 0.75) / total_w
+    exp_nora_obj = (0.8 * 0.5 + 0.3 * 0.25 + 0.15 + 0.75) / total_w
+    assert rows[("Nora", "Oslo")]["score"] == pytest.approx(exp_nora_subj)
+    assert rows[("Dora", "Nora")]["score"] == pytest.approx(exp_nora_obj)
 
 
 def test_fused_side_scores_matches_reference(spark):
