@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from fact_extraction_spark.caches import track
 from fact_extraction_spark.functions.uri import capitalize_first, strip_name
 
 MAX_SENTENCE_TOKENS = 50   # fact_extractor.py:128 / wikipedia_pattern_extractor.py:199
@@ -138,14 +139,17 @@ def learn_lexical_patterns(
             F.col("obj").alias("object"))
         hot = hot_keys(windows, ["subject", "object"], salt_hot_min_count)
         matched = skew_split_join(
-            windows, fk_plain, ["subject", "object"], hot=hot).persist()
+            windows, fk_plain, ["subject", "object"], hot=hot)
     else:
         fk = F.broadcast(training_facts.select(
             F.col("subj").alias("subject"), "pred",
             F.col("obj").alias("object")))
-        # matched feeds two aggregates, instances three — persist both so the
-        # mention/window chain upstream executes once (fan-out hygiene)
-        matched = windows.join(fk, ["subject", "object"]).persist()  # adds pred
+        matched = windows.join(fk, ["subject", "object"])  # adds pred
+    # matched feeds two aggregates, instances three — persist both so the
+    # join upstream executes once (fan-out hygiene). matched is tracked for
+    # caches.release; instances is returned as the model's
+    # training_instances, so the model owns it
+    matched = track(matched.persist())
 
     # one row per covered sentence-extraction instance (url, sent, obj, pred)
     instances = matched.select(

@@ -40,8 +40,9 @@ is a projection over it:
 * ``fused_anchor_mentions`` — anchor mention rows (streaming ingest);
 * ``detect_dictionary_mentions`` and
   ``detect_dictionary_mentions_mapside_sentences`` — the declared
-  dictionary queries, composed as the pipeline composes them: one persist
-  of the pruned kernel output, then ``hot_hits`` or ``_mapside_union``.
+  dictionary queries, composed as the pipeline composes them: the pruned
+  kernel output materialized once (``_filled``), then ``hot_hits`` or
+  ``_mapside_union``.
 
 Scale notes: the full alias dictionary is broadcast only under the
 ``broadcast`` strategy; at 10^7 aliases the map-side split keeps the
@@ -60,7 +61,7 @@ from pyspark.sql.types import (
     ArrayType, DoubleType, IntegerType, StringType, StructField, StructType,
 )
 
-from fact_extraction_spark.caches import track
+from fact_extraction_spark import caches
 from fact_extraction_spark.functions.uri import capitalize_first, strip_name
 from fact_extraction_spark.textops.aho import TokenAhoCorasick
 from fact_extraction_spark.textops.tokenizer import tokenize
@@ -383,8 +384,8 @@ def resolve_redirects(redirects: DataFrame, max_hops: int = 8) -> DataFrame:
     over a SMALL dimension table, never the corpus). Generalizes the
     reference's single-hop dict substitution (redirects_substitutor.py:52-64).
 
-    The fixpoint loop is DRIVER-SERIAL (an eager localCheckpoint + one agg
-    per hop), so repeated calls over the SAME redirects table — learn's
+    The fixpoint loop is DRIVER-SERIAL (a materialized hop + one agg per
+    hop), so repeated calls over the SAME redirects table — learn's
     redirect map plus every dictionary-context build in the session — are
     memoized per (table identity, max_hops), objects pinned
     (_cached_by_identity): the checkpointed result is lineage-free and
@@ -398,6 +399,7 @@ def resolve_redirects(redirects: DataFrame, max_hops: int = 8) -> DataFrame:
 def _resolve_redirects_fixpoint(redirects: DataFrame,
                                 max_hops: int) -> DataFrame:
     resolved = redirects.select("alias", "target")
+    previous = None
     for _ in range(max_hops):
         stepped = (
             resolved.alias("r")
@@ -408,7 +410,11 @@ def _resolve_redirects_fixpoint(redirects: DataFrame,
                 (F.col("n.target").isNotNull()).alias("changed"),
             )
         )
-        stepped = stepped.localCheckpoint(eager=True)  # cut lineage per hop
+        # cut lineage per hop; the hop before is then no longer read
+        stepped, _ = caches.materialize(stepped, owned=True)
+        if previous is not None:
+            caches.free(previous)
+        previous = stepped
         any_changed = stepped.agg(F.max("changed")).first()[0]
         resolved = stepped.drop("changed")
         if not any_changed:
@@ -686,14 +692,12 @@ def scan_kernel(df: DataFrame, head_bc=None, redirect_map_bc=None,
 
 
 def _filled(df: DataFrame) -> DataFrame:
-    """Persist ``df`` and fill it with one eager count: its rows feed
-    several independent subtrees of the downstream action (hot hits,
-    candidate positions, the tail join-back, anchor-mention profiles), and
-    independent stages of one job run concurrently — each that reaches an
-    unfilled cache partition would recompute the whole corpus scan."""
-    df = track(df.persist())
-    df.count()
-    return df
+    """``df`` materialized (caches.materialize): its rows feed several
+    independent subtrees of the downstream action (hot hits, candidate
+    positions, the tail join-back, anchor-mention profiles), and
+    independent stages of one job run concurrently — each that reached an
+    unfilled table would recompute the whole corpus scan."""
+    return caches.materialize(df)[0]
 
 
 def _explode_spans(sent: DataFrame, field: str, keep_cols: tuple = (),
@@ -813,8 +817,8 @@ def detect_dictionary_mentions(sentences: DataFrame, alias_bc) -> DataFrame:
     """Scan sentence rows against the full broadcast alias dictionary.
 
     Output: (url, sent_id, rel_pos, tokens, start, end, alias, entity) —
-    the broadcast-strategy composition of the pipeline: one persist of the
-    pruned kernel output, then ``hot_hits``."""
+    the broadcast-strategy composition of the pipeline: the pruned kernel
+    output materialized once, then ``hot_hits``."""
     sent = _filled(scan_kernel(sentences, head_bc=alias_bc, no_tail=True,
                                prune_empty=True))
     return hot_hits(sent)
@@ -831,13 +835,13 @@ def detect_dictionary_mentions_mapside_sentences(
     first-token set fits ``max_first_tokens`` (see
     collect_first_token_broadcast); above it every sentence is kept and the
     tail join posexplodes all tokens."""
-    ft_bc, wit_bc, tail_empty = collect_tail_broadcasts(tail,
-                                                         max_first_tokens)
+    tail, n_tail = caches.materialize(tail.select("alias", "entity", "key"))
+    ft_bc, wit_bc = collect_tail_broadcasts(tail, n_tail, max_first_tokens)
     sent = _filled(scan_kernel(sentences, head_bc=head_bc,
                                first_tok_bc=ft_bc, witness_bc=wit_bc,
                                prune_empty=ft_bc is not None))
     return _mapside_union(sent, tail, max_tail_tokens,
-                          use_cand=ft_bc is not None, tail_empty=tail_empty)
+                          use_cand=ft_bc is not None, tail_empty=n_tail == 0)
 
 
 # --------------------------------------------------------------------------
@@ -886,7 +890,7 @@ def split_alias_dictionary(aliases: DataFrame, hot_k: int = 100_000,
     entity of a hot alias rides along, so ambiguity is preserved on both
     paths. Deterministic (length, alias) ordering via distributed top-k —
     no global window, no driver collect. ``keyed`` lets the caller pass an
-    already-computed (ideally persisted) ``alias_join_keys(aliases)`` so
+    already-computed (ideally materialized) ``alias_join_keys(aliases)`` so
     the tokenizing UDF over the dimension runs once per context build, not
     once per derived job.
     """
@@ -964,23 +968,22 @@ def collect_tail_witness_broadcast(tail: DataFrame,
     return spark.sparkContext.broadcast(frozenset(r["tok"] for r in rows))
 
 
-def collect_tail_broadcasts(tail: DataFrame, max_rows: int = 2_000_000):
-    """(first_token_bc, witness_bc, tail_empty) for the tail, with ONE cheap
-    limit(1) probe short-circuiting both driver collect jobs when the tail
-    is empty (every alias fit in the head — common in tests and bounded
-    domains; ADVICE r6): the empty tail's sets are empty frozensets by
-    definition. ``tail_empty`` lets callers skip _mapside_union's own
-    emptiness probe."""
-    if tail.select("key").limit(1).count() == 0:
+def collect_tail_broadcasts(tail: DataFrame, n_tail: int,
+                            max_rows: int = 2_000_000):
+    """(first_token_bc, witness_bc) for a tail of ``n_tail`` rows. An empty
+    tail (every alias fit in the head — common in tests and bounded
+    domains; ADVICE r6) skips both driver collect jobs: its sets are empty
+    frozensets by definition."""
+    if n_tail == 0:
         empty = tail.sparkSession.sparkContext.broadcast(frozenset())
-        return empty, empty, True
+        return empty, empty
     return (collect_first_token_broadcast(tail, max_rows),
-            collect_tail_witness_broadcast(tail, max_rows), False)
+            collect_tail_witness_broadcast(tail, max_rows))
 
 
 def _mapside_union(sent: DataFrame, tail: DataFrame,
                    max_tail_tokens: int, use_cand: bool = False,
-                   tail_empty: bool | None = None) -> DataFrame:
+                   tail_empty: bool = False) -> DataFrame:
     """Hot-head hits ∪ n-gram tail join over sentence rows
     (url, sent_id, rel_pos, tokens, hits[, cand]).
 
@@ -990,18 +993,12 @@ def _mapside_union(sent: DataFrame, tail: DataFrame,
     on filler-heavy web text a >100× row reduction over posexploding every
     token.
 
-    ``tail_empty``: the caller's already-known emptiness of the tail
-    (collect_tail_broadcasts probes it once at context build); None means
-    unknown — probe here as before."""
+    ``tail`` is the materialized (alias, entity, key) tail and
+    ``tail_empty`` its known emptiness: an empty tail (every alias fit in
+    the head) skips the n-gram explode + two joins, which would still run
+    over the whole corpus just to produce zero rows."""
     hot = hot_hits(sent)
-
-    if tail_empty is True:
-        return hot
-    tail_keyed = track(tail.select("alias", "entity", "key").persist())
-    # empty tail (every alias fit in the head): the n-gram explode +
-    # two joins would still execute over the whole corpus just to produce
-    # zero rows — short-circuit with one cheap dimension-table probe
-    if tail_empty is None and tail_keyed.limit(1).count() == 0:
+    if tail_empty:
         return hot
 
     if use_cand:
@@ -1011,7 +1008,7 @@ def _mapside_union(sent: DataFrame, tail: DataFrame,
                           F.explode("cand").alias("start"))
     else:
         first_toks = F.broadcast(
-            tail_keyed.select(F.split("key", " ")[0].alias("tok")).distinct())
+            tail.select(F.split("key", " ")[0].alias("tok")).distinct())
         # candidate positions: only where a tail alias could start
         pos = (
             sent.select("url", "sent_id", "tokens",
@@ -1037,7 +1034,8 @@ def _mapside_union(sent: DataFrame, tail: DataFrame,
                 F.col("g.gram").alias("gram"))
     )
     tail_hits = (
-        grams.join(tail_keyed.withColumnRenamed("key", "gram"), "gram")
+        grams.join(tail.select("alias", "entity", F.col("key").alias("gram")),
+                   "gram")
         .drop("gram")
         # re-attach sentence context (tokens never ride through the n-gram
         # shuffle; hit rows are a tiny fraction of gram rows)

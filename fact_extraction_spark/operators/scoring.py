@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from fact_extraction_spark.caches import track
+from fact_extraction_spark import caches
 from fact_extraction_spark.functions.uri import capitalize_first, strip_name
 
 RELATIVE_POSITION_WEIGHT = 0.15  # pattern_matcher.py:45
@@ -221,13 +221,14 @@ def score_candidates(
                                       F.lit("object").alias("side")))
             .distinct())
         n_types = types.groupBy("entity").agg(F.count("*").alias("n_types"))
-        sides = track(fused_side_scores(
-            types, pattern_types, type_probs, pattern_stats, n_types,
-            ents_both, allow_unknown_entity_types).persist())
         # the side table (candidate entities × admissible preds) sits behind
-        # aggregates whose size Catalyst cannot estimate, so measure it once:
-        # a broadcast keeps the corpus-sized candidate table from shuffling
-        small = sides.count() <= SIDE_BROADCAST_ROWS
+        # aggregates whose size Catalyst cannot estimate, so materialize it
+        # and measure it once: a broadcast keeps the corpus-sized candidate
+        # table from shuffling
+        sides, n_sides = caches.materialize(fused_side_scores(
+            types, pattern_types, type_probs, pattern_stats, n_types,
+            ents_both, allow_unknown_entity_types))
+        small = n_sides <= SIDE_BROADCAST_ROWS
 
         def side_table(side: str) -> DataFrame:
             """(side-named entity, pred, {side}_type_score) projection."""

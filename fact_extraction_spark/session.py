@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 # Bounded Arrow batches: a single "giant page" row can be multi-MB; batches
@@ -40,8 +41,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` in the sandbox and is
-    left unset under ``spark-submit`` (cluster manager decides).
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``. Under
+    ``spark-submit`` (a Python driver launched by the JVM, which hands it
+    ``PYSPARK_GATEWAY_PORT``) every key the submitter set, its master
+    included, is kept: the defaults fill in only the rest.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -54,8 +57,14 @@ def get_spark(
         os.environ["PYTHONPATH"] = (
             repo_root + (os.pathsep + existing if existing else ""))
 
+    submitted: set[str] = set()
+    if "PYSPARK_GATEWAY_PORT" in os.environ:
+        # what spark-submit was given: the launching JVM's system
+        # properties, which SparkConf reads once the gateway is connected
+        SparkContext._ensure_initialized()
+        submitted = {k for k, _ in SparkConf().getAll()}
     builder = SparkSession.builder.appName(app_name)
-    if master is None and "SPARK_SUBMIT" not in os.environ:
+    if master is None and "spark.master" not in submitted:
         master = f"local[{cpus}]"
     if master:
         builder = builder.master(master)
@@ -91,6 +100,7 @@ def get_spark(
         "spark.ui.enabled": "false",
         "spark.executorEnv.PYTHONPATH": os.environ["PYTHONPATH"],
     }
+    conf = {k: v for k, v in conf.items() if k not in submitted}
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

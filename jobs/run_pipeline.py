@@ -53,16 +53,15 @@ def main(argv: list[str] | None = None) -> int:
     args = p.parse_args(argv)
 
     # Import AFTER argparse so --help works without the zip on sys.path.
-    from pyspark.sql import SparkSession
-
     from fact_extraction_spark.plans.pipeline import (
         PipelineConfig, extract, learn)
+    from fact_extraction_spark.session import get_spark
     from fact_extraction_spark.sinks.snapshot import (
         commit_partitions, with_part_id)
 
-    # Under spark-submit the master/conf come from the submitter; this only
-    # fills in defaults when run directly.
-    spark = SparkSession.builder.appName("kg_construct").getOrCreate()
+    # under spark-submit the submitter's master and conf win; the engine
+    # defaults fill in the rest
+    spark = get_spark("kg_construct")
 
     exclude = None
     if args.fixture:
@@ -106,6 +105,9 @@ def main(argv: list[str] | None = None) -> int:
     summary = commit_partitions(spark, triples, args.out, stage="triples")
     summary["wall_sec"] = round(time.time() - t0, 2)
     summary["n_pages"] = pages.count()
+    summary["master"] = spark.sparkContext.master
+    summary["shuffle_partitions"] = int(
+        spark.conf.get("spark.sql.shuffle.partitions"))
     print(json.dumps(summary))
     spark.stop()
     return 0

@@ -12,13 +12,8 @@ from fact_extraction_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    # every action renders its physical plan as text for the SQL status
-    # store; cached subplans repeat in full at each reference, so one
-    # dictionary-mode extract renders ~160 MB and a few of them exhaust a
-    # host-sized heap — cap the rendered text
     s = get_spark("fact_extraction_spark_tests", master="local[4]",
-                  shuffle_partitions=8,
-                  extra_conf={"spark.sql.maxPlanStringLength": str(1 << 20)})
+                  shuffle_partitions=8)
     yield s
 
 

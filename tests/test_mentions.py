@@ -1,6 +1,7 @@
 """Stage-2 mention detection: AC automaton, anchor tagging, redirects."""
 
 import pytest
+from fact_extraction_spark import caches
 from fact_extraction_spark.operators.extract_text import explode_sentences, extract_text
 from fact_extraction_spark.operators.mentions import (
     anchor_mention_rows,
@@ -212,7 +213,7 @@ def test_dictionary_strategy_auto_switch(spark, tables, monkeypatch):
     ctx2 = pipeline._build_dict_ctx(
         spark, tables["pages"], tables["redirects"], cfg)
     assert ctx2["mode"] == "mapside"
-    ctx2["tail"].unpersist()
+    caches.free(ctx2["tail"])
 
 
 def test_capitalize_colliding_redirects_resolve_identically(spark):
@@ -292,7 +293,7 @@ def test_unanchored_mapside_prune_identical_through_pipeline(spark, tables):
         outs.append(sorted(
             (r["url"], r["sent_id"], r["start"], r["end"], r["entity"])
             for r in m.collect()))
-        ctx["tail"].unpersist()
+        caches.free(ctx["tail"])
     assert outs[0] == outs[1] and outs[0]
 
 

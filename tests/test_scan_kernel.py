@@ -9,47 +9,57 @@ import sys
 import pytest
 
 import __spark_entry__ as entry_mod
+from fact_extraction_spark import caches
 from fact_extraction_spark.operators import mentions
 from fact_extraction_spark.plans.pipeline import (
-    LearnedModel, PipelineConfig, extract, learn)
+    PipelineConfig, extract, learn)
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-_PLAN_CAP = "spark.sql.maxPlanStringLength"
 _PY_NODE = re.compile(
     r"\b(MapInPandas|MapInArrow|ArrowEvalPython|BatchEvalPython)\b.*")
 
 
-def corpus_scans(df) -> set[str]:
-    """The distinct Python nodes of ``df``'s executed plan, cached subplans
-    included, that read page html or sentence text. A Python node over a
-    dimension table (alias_join_keys) reads neither."""
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.fixture
+def stage_plans(monkeypatch):
+    """The executed plans of the tables caches.materialize is given while
+    the test runs: a scan behind a stage boundary is in one of them, and
+    the plans built over the boundary start at its rows."""
+    plans = []
+
+    def recording(df, owned=False):
+        out = orig(df, owned)
+        plans.append(_executed_plan(df))
+        return out
+    orig = caches.materialize
+    monkeypatch.setattr(caches, "materialize", recording)
+    return plans
+
+
+def corpus_scans(df, stage_plans: list[str]) -> set[str]:
+    """The distinct Python nodes that read page html or sentence text, over
+    ``df``'s executed plan (cached subplans included) and the plans of the
+    stages materialized on the way to it. A Python node over a dimension
+    table (alias_join_keys) reads neither."""
     df.collect()
-    conf = df.sparkSession.conf
-    cap = conf.get(_PLAN_CAP)
-    conf.unset(_PLAN_CAP)  # the test session caps rendered plans
-    try:
-        plan = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        conf.set(_PLAN_CAP, cap)
-    nodes = {m.group(0) for m in map(_PY_NODE.search, plan.splitlines())
-             if m}
+    nodes = {m.group(0) for plan in (*stage_plans, _executed_plan(df))
+             for m in map(_PY_NODE.search, plan.splitlines()) if m}
     return {n for n in nodes if re.search(r"\b(html|sentence)#", n)}
 
 
 @pytest.fixture(scope="module")
-def lineage_free_model(spark, tables):
-    """A learned model whose tables are local data, so an extract's plan
-    holds only the extract's own nodes."""
+def model(spark, tables):
+    """A model learned in this session: its tables read learn's
+    materialized stages, so no extract plan holds learn's own scan."""
     model = learn(spark, tables["pages"], tables["facts"], tables["types"],
                   tables["redirects"], PipelineConfig(articles_limit=0),
                   exclude_subjects=tables["ground_truth"])
-    dfs = (model.pattern_words, model.pattern_stats, model.pattern_types,
-           model.type_probs, model.rel_stats, model.training_subjects)
-    local = LearnedModel(*(spark.createDataFrame(df.collect(), df.schema)
-                           for df in dfs)).cache()
+    yield model
     model.unpersist()
-    return local
 
 
 @pytest.mark.parametrize("conf", [
@@ -59,23 +69,47 @@ def lineage_free_model(spark, tables):
     {"mention_mode": "dictionary", "dictionary_strategy": "mapside",
      "dictionary_hot_k": 5, "dictionary_scan_unanchored": True},
 ], ids=["anchors", "dict_broadcast", "dict_mapside"])
-def test_extract_plan_scans_corpus_once(spark, tables, lineage_free_model,
+def test_extract_plan_scans_corpus_once(spark, tables, model, stage_plans,
                                         conf):
     cfg = PipelineConfig(articles_limit=0, **conf)
-    triples = extract(spark, tables["pages"], lineage_free_model,
-                      tables["types"], tables["redirects"], cfg)
-    scans = corpus_scans(triples)
+    triples = extract(spark, tables["pages"], model, tables["types"],
+                      tables["redirects"], cfg)
+    scans = corpus_scans(triples, stage_plans)
     assert len(scans) == 1, scans
     assert next(iter(scans)).startswith("MapInPandas")
 
 
 @pytest.mark.parametrize(
     "name", ["dictionary_mentions", "dictionary_mentions_mapside"])
-def test_declared_dictionary_query_plan_scans_corpus_once(spark, name):
+def test_declared_dictionary_query_plan_scans_corpus_once(spark, stage_plans,
+                                                          name):
     query = entry_mod.queries()[name]
-    scans = corpus_scans(query(spark, entry_mod.SF_DEFAULT))
+    scans = corpus_scans(query(spark, entry_mod.SF_DEFAULT), stage_plans)
     assert len(scans) == 1, scans
     assert next(iter(scans)).startswith("MapInPandas")
+
+
+@pytest.mark.parametrize("mode", ["anchors", "dictionary"])
+def test_in_session_extract_plan_stays_small(spark, tables, mode):
+    """learn then extract in one session, as jobs/run_pipeline.py runs
+    them: the final query's formatted plan, the text Spark renders for
+    every action, stays under 1 MiB with no cap on plan strings. Each
+    stage boundary cuts the lineage below it; chained cached subplans,
+    each printed in full at every reference, made it tens of MB."""
+    cfg = PipelineConfig(articles_limit=0, mention_mode=mode)
+    model = learn(spark, tables["pages"], tables["facts"], tables["types"],
+                  tables["redirects"], cfg,
+                  exclude_subjects=tables["ground_truth"])
+    try:
+        triples = extract(spark, tables["pages"], model, tables["types"],
+                          tables["redirects"], cfg)
+        assert triples.count() > 0
+        plan = spark._jvm.PythonSQLUtils.explainString(
+            triples._jdf.queryExecution(), "formatted")
+        assert len(plan) <= 1 << 20, len(plan)
+    finally:
+        model.unpersist()
+        caches.release()
 
 
 def test_mapside_sentence_path_caches_only_matching_sentences(
@@ -124,8 +158,7 @@ from fact_extraction_spark.plans.pipeline import PipelineConfig, extract, learn
 from fact_extraction_spark.session import get_spark
 
 marks = sys.argv[1]
-spark = get_spark("retry_identity", master="local[4,2]", shuffle_partitions=4,
-                  extra_conf={"spark.sql.maxPlanStringLength": str(1 << 20)})
+spark = get_spark("retry_identity", master="local[4,2]", shuffle_partitions=4)
 t = corpus_to_dataframes(spark, generate_corpus(42, 60), partitions=4)
 
 

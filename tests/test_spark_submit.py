@@ -28,7 +28,10 @@ def test_spark_submit_pyfiles_smoke(tmp_path):
     assert os.path.exists(zip_path)
 
     out_dir = str(tmp_path / "kg_out")
-    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    # without SPARK_GRAFT_CPUS the engine's own default master is
+    # local[32], so a session that ignored the submitter would show it
+    env = {k: v for k, v in os.environ.items()
+           if k not in ("PYTHONPATH", "SPARK_GRAFT_CPUS")}
     proc = subprocess.run(
         [spark_submit, "--master", "local[4]",
          "--conf", "spark.sql.shuffle.partitions=8",
@@ -41,6 +44,9 @@ def test_spark_submit_pyfiles_smoke(tmp_path):
     assert proc.returncode == 0, proc.stderr[-3000:]
     summary = json.loads(proc.stdout.strip().splitlines()[-1])
     assert summary["rows"] > 0 and summary["parts"] > 0
+    # the session runs with what was submitted, not the engine defaults
+    assert summary["master"] == "local[4]"
+    assert summary["shuffle_partitions"] == 8
 
     # the committed table is readable through the snapshot reader
     from fact_extraction_spark.session import get_spark
