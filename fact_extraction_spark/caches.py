@@ -10,18 +10,19 @@ re-plans it under AQE, and a cached subplan (``persist()``) is printed in
 full at each place it is referenced, so chained persisted stages made the
 final plan of an in-session extract tens of MB.
 
-Ownership. ``df.unpersist()`` does not free a checkpoint; only its RDD's
+Lifetime. ``df.unpersist()`` does not free a checkpoint; only its RDD's
 ``unpersist`` does (``free``), and after that any read of the DataFrame
-fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``. So each table has one
-owner:
+fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``. There is one rule: a
+model's six tables are freed by ``LearnedModel.unpersist()``; every other
+driver-side table is materialized or ``track``-ed and lives until
+``release()``. Call it after the action that consumes an extract, never
+while a DataFrame built over a tracked table is still to be read.
 
-* tables memoized in a ``LearnedModel``'s ``extras`` (the dictionary
-  context, the discovery-excluded set, the training instances) belong to
-  the model, and only ``LearnedModel.unpersist()`` frees them;
-* every other materialized or persisted table is ``track``-ed, and
-  ``release()`` frees it. Call it after the action that consumes an
-  extract, never while a DataFrame built over a tracked table is still to
-  be read.
+Reuse. ``memo(name, objs, build)`` keeps ``build()`` per ``name`` and the
+identities of ``objs`` until ``release()``, which drops every entry along
+with the tables its build materialized. It serves what one session builds
+twice from the same inputs: the resolved redirects, the broadcast redirect
+map, the dictionary context.
 
 Fault model. A task that fails while reading a checkpoint re-reads its
 blocks, so task retry leaves the output identical. A local checkpoint's
@@ -38,16 +39,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 _TRACKED: list[DataFrame] = []
+_MEMO: dict = {}
 
 
-def materialize(df: DataFrame, owned: bool = False) -> tuple[DataFrame, int]:
-    """``df`` computed once with its lineage cut, and its row count. The
-    result is tracked for ``release()`` unless ``owned`` (the caller keeps
-    it and frees it with ``free``)."""
+def materialize(df: DataFrame) -> tuple[DataFrame, int]:
+    """``df`` computed once with its lineage cut, and its row count; the
+    result is tracked for ``release()``."""
     df = df.localCheckpoint(eager=False)
     rows = df.count()
-    if not owned:
-        track(df)
+    track(df)
     return df, rows
 
 
@@ -55,6 +55,19 @@ def track(df: DataFrame) -> DataFrame:
     """Register a materialized or persisted DataFrame for ``release()``."""
     _TRACKED.append(df)
     return df
+
+
+def memo(name, objs: tuple, build):
+    """``build()``, kept per ``name`` and the identities of ``objs`` until
+    ``release()``. The entry pins ``objs`` and a hit re-checks them with
+    ``is``, so a recycled ``id()`` can never serve another input's value."""
+    key = (name, *map(id, objs))
+    entry = _MEMO.get(key)
+    if entry is not None and all(a is b for a, b in zip(entry[0], objs)):
+        return entry[1]
+    value = build()
+    _MEMO[key] = (objs, value)
+    return value
 
 
 def free(df: DataFrame) -> None:
@@ -71,9 +84,11 @@ def free(df: DataFrame) -> None:
 
 
 def release() -> int:
-    """Free every tracked DataFrame; returns how many were released."""
+    """Free every tracked DataFrame and drop every memo entry; returns how
+    many tables were released."""
     n = len(_TRACKED)
     for df in _TRACKED:
         free(df)
     _TRACKED.clear()
+    _MEMO.clear()
     return n

@@ -100,27 +100,20 @@ _FILLER_WORDS = (
 
 
 def _filler_paragraphs(rng: random.Random, first: str,
-                       target_bytes: int,
-                       inert: bool = False) -> list[list[str]]:
+                       target_bytes: int) -> list[list[str]]:
     """Deterministic unanchored filler totalling ~``target_bytes`` of raw
     wikitext, with cascade-exercising noise mixed in (templates, paired
     refs, comments — all of which stage 1 must strip). Models the real
     web-text shape where fact-bearing sentences are a tiny fraction of
-    page bytes.
-
-    ``inert`` swaps the page subject's first name for a lowercase common
-    phrase, so the filler contains NO dictionary token at all — the
-    nav-menu/boilerplate web shape, where the scan's raw-sentence probe
-    can skip tokenization outright (the default entity-dense shape names
-    the subject in every filler sentence, modelling body prose)."""
-    subj = "The villagers" if inert else first
+    page bytes. Every filler sentence names the subject, modelling body
+    prose."""
     paras: list[list[str]] = []
     size = 0
     i = 0
     while size < target_bytes:
         words = [rng.choice(_FILLER_WORDS) for _ in range(rng.randint(28, 44))]
         cut = len(words) // 2
-        sent = (f"{subj} noted the {' '.join(words[:cut])} that year. "
+        sent = (f"{first} noted the {' '.join(words[:cut])} that year. "
                 f"The {' '.join(words[cut:])} remained in the record.")
         if i % 5 == 2:
             sent += " {{cite journal | title = %s }}" % " ".join(words[:4])
@@ -135,8 +128,7 @@ def _filler_paragraphs(rng: random.Random, first: str,
 
 
 def _person_wikitext(rng: random.Random, first: str, sentences: list[str],
-                     giant: bool = False, fat_kb: int = 0,
-                     fat_inert: bool = False) -> str:
+                     giant: bool = False, fat_kb: int = 0) -> str:
     """Assemble a page's raw wikitext: infobox + noise + sentence paragraphs.
 
     ``fat_kb`` > 0 pads the page with ~that many KiB of deterministic
@@ -162,8 +154,7 @@ def _person_wikitext(rng: random.Random, first: str, sentences: list[str],
                   for i in range(520)]
         paras.extend([[f] for f in filler])
     if fat_kb > 0:
-        paras.extend(_filler_paragraphs(rng, first, fat_kb * 1024,
-                                        inert=fat_inert))
+        paras.extend(_filler_paragraphs(rng, first, fat_kb * 1024))
     body = []
     for p in paras:
         body.append(" ".join(p))
@@ -311,167 +302,3 @@ def corpus_to_dataframes(spark, fx: FixtureCorpus, partitions: int = 8):
         schema="subj string, pred string, obj string")
     return {"pages": pages, "facts": facts, "types": types,
             "redirects": redirects, "ground_truth": gt}
-
-
-def _derive_pools(seed: int, n_persons: int):
-    """The shared entity pools, as generate_corpus derives them but capped:
-    at bench scale an uncapped pool (n/10 entities) makes every object a
-    near-unique key — capping keeps the dimension tables bounded and the
-    hot-key skew realistic (more mentions per entity, not fewer)."""
-    rng = random.Random(seed)
-    n_cities = min(max(6, n_persons // 10), 20000)
-    n_unis = min(max(4, n_persons // 15), 10000)
-    n_cos = min(max(4, n_persons // 15), 10000)
-    cities = [HUB_CITY, REDIRECT_ONLY_CITY] + [
-        _mkname(rng) + "_City" for _ in range(n_cities - 2)]
-    unis = [_mkname(rng) + "_University" for _ in range(n_unis)]
-    cos = [_mkname(rng) + "_Works" for _ in range(n_cos)]
-    return cities, unis, cos
-
-
-def generate_bench_corpus(spark, seed: int, n_persons: int, out_dir: str,
-                          partitions: int = 64, fat_kb: int = 0,
-                          fat_inert: bool = False) -> None:
-    """Distributed deterministic corpus generator for benchmarking.
-
-    ``generate_corpus`` is a driver-side loop (fine for test-sized fixtures,
-    serial at bench scale); this generates person pages INSIDE executors via
-    ``mapInPandas``, with an independent ``Random(f"{seed}:{idx}")`` per
-    person so the output is a pure function of (seed, n_persons) regardless
-    of partitioning. Content distribution mirrors generate_corpus (same
-    templates, pools, hub-city skew, giant page, redirect fixtures); the
-    exact sentences differ because the serial generator threads one RNG
-    through all persons.
-
-    ``fat_kb`` > 0 pads every person page with ~that many KiB of
-    deterministic unanchored filler (see ``_filler_paragraphs``) — the
-    realistic web-page shape. The filler draws its rng AFTER all
-    fact/sentence draws, so the fact tables and the extracted triple set
-    are identical between a fat and a thin corpus at the same
-    (seed, n_persons): only the text-stage byte volume changes.
-    ``fat_inert`` makes the filler dictionary-token-free (boilerplate
-    shape) instead of subject-naming (body-prose shape) — same identity
-    guarantee.
-    """
-    import pandas as pd
-
-    cities, unis, cos = _derive_pools(seed, n_persons)
-    pools_bc = spark.sparkContext.broadcast((cities, unis, cos))
-    n_test = max(3, (n_persons + 1) // 5)
-    first_test_idx = (n_persons + 1) - n_test
-    base_epoch = int(_dt.datetime(2024, 1, 1,
-                                  tzinfo=_dt.timezone.utc).timestamp())
-
-    out_ddl = (_PAGES_DDL + ", facts string, gt string, ptypes string")
-
-    def _gen(batches):
-        cities, unis, cos = pools_bc.value
-        obj_pool = {"birthPlace": cities, "almaMater": unis, "employer": cos}
-        all_entities = cities + unis + cos  # hoisted: per-person concat of
-        # the full pools was ~20 ms/person at bench scale
-        for pdf in batches:
-            rows = []
-            for idx in pdf["id"]:
-                idx = int(idx)
-                rng = random.Random(f"{seed}:{idx}")
-                is_giant = idx == n_persons
-                person = (GIANT_PAGE_PERSON if is_giant else
-                          f"{_FIRST_NAMES[idx % len(_FIRST_NAMES)]}_"
-                          f"{_mkname(rng, 2)}{rng.choice(_LAST_SUFFIX)}_{idx}")
-                in_test = idx >= first_test_idx
-                first = person.split("_")[0]
-                sentences, facts, gt, ptypes = [], [], [], [(person, "Person")]
-                for pred in RELATIONS:
-                    if rng.random() < 0.8:
-                        pool = obj_pool[pred]
-                        if pred == "birthPlace" and rng.random() < 0.3:
-                            obj = HUB_CITY
-                        else:
-                            obj = rng.choice(pool)
-                        tmpl = rng.choice(_TEMPLATES[pred])
-                        link_title = ("Veldt_Haven" if obj == REDIRECT_ONLY_CITY
-                                      else obj)
-                        sentences.append(tmpl.format(
-                            first=first, obj=_wikilink(link_title)))
-                        facts.append((person, pred, obj))
-                        if in_test:
-                            gt.append((person, pred, obj))
-                if rng.random() < 0.3:
-                    facts.append((person, "deathPlace", rng.choice(cities)))
-                if rng.random() < 0.6:
-                    obj = rng.choice(all_entities)
-                    sentences.append(rng.choice(_DISTRACTORS).format(
-                        first=first, obj=_wikilink(obj)))
-                rng.shuffle(sentences)
-                if rng.random() < 0.3:
-                    ptypes.append((person, "Agent"))
-                raw = _person_wikitext(rng, first, sentences, giant=is_giant,
-                                       fat_kb=fat_kb, fat_inert=fat_inert)
-                rows.append({
-                    "url": "https://en.wikipedia.org/wiki/" + person,
-                    "warc_ts": _dt.datetime.fromtimestamp(
-                        base_epoch + idx, _dt.timezone.utc),
-                    "html": raw.encode("utf-8"),
-                    "text": extract_article_text(raw),
-                    "lang": "de" if idx % 37 == 5 else "en",
-                    "facts": ";".join("%s|%s|%s" % f for f in facts),
-                    "gt": ";".join("%s|%s|%s" % g for g in gt),
-                    "ptypes": ";".join("%s|%s" % t for t in ptypes),
-                })
-            yield pd.DataFrame(rows)
-
-    from pyspark.sql import functions as F
-
-    gen = (spark.range(n_persons + 1).repartition(partitions)
-           .mapInPandas(_gen, schema=out_ddl)).persist()
-
-    pages = gen.select("url", "warc_ts", "html", "text", "lang")
-    pages.write.mode("overwrite").parquet(f"{out_dir}/pages.parquet")
-
-    def _split3(col, names):
-        return (gen.filter(F.col(col) != "")
-                .select(F.explode(F.split(F.col(col), ";")).alias("_e"))
-                .select(F.split(F.col("_e"), r"\|").alias("_s"))
-                .select(*[F.col("_s")[i].alias(n) for i, n in enumerate(names)]))
-
-    facts = _split3("facts", ["subj", "pred", "obj"]).unionByName(
-        spark.createDataFrame(
-            [("Bad__Entity", "birthPlace", cities[0])],
-            "subj string, pred string, obj string"))
-    facts.coalesce(8).write.mode("overwrite").parquet(f"{out_dir}/facts.parquet")
-    _split3("gt", ["subj", "pred", "obj"]).coalesce(4).write.mode(
-        "overwrite").parquet(f"{out_dir}/ground_truth.parquet")
-
-    obj_types = []
-    for c in cities:
-        obj_types += [(c, "Settlement"), (c, "Place")]
-    for u in unis:
-        obj_types += [(u, "University"), (u, "Organisation")]
-    for co in cos:
-        obj_types += [(co, "Company"), (co, "Organisation")]
-    types = _split3("ptypes", ["entity", "type"]).unionByName(
-        spark.createDataFrame(obj_types, "entity string, type string"))
-    types.coalesce(8).write.mode("overwrite").parquet(f"{out_dir}/types.parquet")
-
-    redirects = [("Veldt_Haven", REDIRECT_ONLY_CITY),
-                 ("Old_Veldt", "Veldt_Haven"),
-                 ("grandmere_City", HUB_CITY),
-                 ("The_Grand_City", HUB_CITY)]
-    spark.createDataFrame(redirects, "alias string, target string") \
-        .coalesce(1).write.mode("overwrite") \
-        .parquet(f"{out_dir}/redirects.parquet")
-
-    # object pages so links resolve to real rows
-    obj_rows = []
-    for row_idx, title in enumerate(cities + unis + cos):
-        raw = ("{{Infobox place}}\nThe town of %s is known for festivals.\n\n"
-               "== References ==\n") % title.replace("_", " ")
-        obj_rows.append((
-            "https://en.wikipedia.org/wiki/" + title,
-            _dt.datetime.fromtimestamp(base_epoch + 86400 + row_idx,
-                                       _dt.timezone.utc),
-            raw.encode("utf-8"), extract_article_text(raw), "en"))
-    spark.createDataFrame(obj_rows, _PAGES_DDL).coalesce(4) \
-        .write.mode("append").parquet(f"{out_dir}/pages.parquet")
-    gen.unpersist()
-

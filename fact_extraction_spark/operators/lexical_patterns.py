@@ -97,10 +97,12 @@ def cap_training_facts(
     if exclude_subjects is not None:
         df = df.join(exclude_subjects.select("subj").distinct(),
                      "subj", "left_anti")
-    pred_rank = F.dense_rank().over(
-        Window.orderBy("pred"))  # small-dim window; predicates are few
-    df = df.withColumn("_pr", pred_rank).filter(
-        F.col("_pr") <= relation_types_limit).drop("_pr")
+    # rank the distinct predicates, not the fact rows: the unpartitioned
+    # window then moves a dimension-sized table to one partition
+    kept = (df.select("pred").distinct()
+            .withColumn("_pr", F.row_number().over(Window.orderBy("pred")))
+            .filter(F.col("_pr") <= relation_types_limit).select("pred"))
+    df = df.join(F.broadcast(kept), "pred", "left_semi")
     fact_rank = F.row_number().over(
         Window.partitionBy("pred").orderBy("subj", "obj"))
     return df.withColumn("_fr", fact_rank).filter(
@@ -146,15 +148,14 @@ def learn_lexical_patterns(
             F.col("obj").alias("object")))
         matched = windows.join(fk, ["subject", "object"])  # adds pred
     # matched feeds two aggregates, instances three — persist both so the
-    # join upstream executes once (fan-out hygiene). matched is tracked for
-    # caches.release; instances is returned as the model's
-    # training_instances, so the model owns it
+    # join upstream executes once (fan-out hygiene); caches.release frees
+    # both
     matched = track(matched.persist())
 
     # one row per covered sentence-extraction instance (url, sent, obj, pred)
-    instances = matched.select(
-        "url", "sent_id", "rel_pos", "subject", "object", "pred") \
-        .distinct().persist()
+    instances = track(matched.select(
+        "url", "sent_id", "rel_pos", "subject", "object", "pred")
+        .distinct().persist())
 
     raw_words = (
         matched.select("pred", F.explode("slots").alias("s"))

@@ -374,9 +374,6 @@ def _capitalize(name: str) -> str:
 # alias dictionary construction (DataFrame-side, fully relational)
 # --------------------------------------------------------------------------
 
-_RESOLVED_REDIRECTS_CACHE: dict = {}
-
-
 def resolve_redirects(redirects: DataFrame, max_hops: int = 8) -> DataFrame:
     """Collapse multi-hop redirect chains: (alias, final_target).
 
@@ -385,14 +382,12 @@ def resolve_redirects(redirects: DataFrame, max_hops: int = 8) -> DataFrame:
     reference's single-hop dict substitution (redirects_substitutor.py:52-64).
 
     The fixpoint loop is DRIVER-SERIAL (a materialized hop + one agg per
-    hop), so repeated calls over the SAME redirects table — learn's
-    redirect map plus every dictionary-context build in the session — are
-    memoized per (table identity, max_hops), objects pinned
-    (_cached_by_identity): the checkpointed result is lineage-free and
-    reusable, and a different redirects DataFrame can never hit the entry.
+    hop), so the lineage-free result is kept per redirects table until
+    ``caches.release()`` (``caches.memo``): it serves both the redirect map
+    and the alias candidates of a dictionary extract.
     """
-    return _cached_by_identity(
-        _RESOLVED_REDIRECTS_CACHE, redirects, max_hops,
+    return caches.memo(
+        ("resolve_redirects", max_hops), (redirects,),
         lambda: _resolve_redirects_fixpoint(redirects, max_hops))
 
 
@@ -411,7 +406,7 @@ def _resolve_redirects_fixpoint(redirects: DataFrame,
             )
         )
         # cut lineage per hop; the hop before is then no longer read
-        stepped, _ = caches.materialize(stepped, owned=True)
+        stepped, _ = caches.materialize(stepped)
         if previous is not None:
             caches.free(previous)
         previous = stepped
@@ -472,14 +467,17 @@ def collect_redirect_map(spark: SparkSession, redirects: DataFrame):
     """Broadcast {alias → final target} (underscore form, capitalized).
 
     When two aliases collapse to the same capitalized form with different
-    targets, the smallest target wins, so the map is deterministic."""
-    resolved = resolve_redirects(redirects)
-    mapping: dict[str, str] = {}
-    for r in resolved.collect():
-        alias, target = _capitalize(r["alias"]), _capitalize(r["target"])
-        if alias not in mapping or target < mapping[alias]:
-            mapping[alias] = target
-    return spark.sparkContext.broadcast(mapping)
+    targets, the smallest target wins, so the map is deterministic. Kept
+    per redirects table until ``caches.release()``: learn and the extract
+    after it in one session broadcast it once."""
+    def build():
+        mapping: dict[str, str] = {}
+        for r in resolve_redirects(redirects).collect():
+            alias, target = _capitalize(r["alias"]), _capitalize(r["target"])
+            if alias not in mapping or target < mapping[alias]:
+                mapping[alias] = target
+        return spark.sparkContext.broadcast(mapping)
+    return caches.memo("redirect_map", (redirects,), build)
 
 
 # --------------------------------------------------------------------------

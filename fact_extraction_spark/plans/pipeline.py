@@ -18,7 +18,7 @@ tables, broadcast at use sites.
 from __future__ import annotations
 
 import logging
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -150,28 +150,20 @@ class LearnedModel:
     type_probs: DataFrame
     rel_stats: DataFrame
     training_subjects: DataFrame
-    extras: dict = field(default_factory=dict)
+
+    def tables(self) -> tuple[DataFrame, ...]:
+        return (self.pattern_words, self.pattern_stats, self.pattern_types,
+                self.type_probs, self.rel_stats, self.training_subjects)
 
     def cache(self) -> "LearnedModel":
-        for df in (self.pattern_words, self.pattern_stats, self.pattern_types,
-                   self.type_probs, self.rel_stats, self.training_subjects):
+        for df in self.tables():
             df.cache()
         return self
 
     def unpersist(self) -> "LearnedModel":
-        """Free the model's tables and the ones it owns in ``extras`` (see
-        ``caches``). The memos are dropped, so an extract over this model
-        would rebuild them."""
-        owned = [self.pattern_words, self.pattern_stats, self.pattern_types,
-                 self.type_probs, self.rel_stats, self.training_subjects,
-                 self.extras.get("training_instances")]
-        for key in [k for k in self.extras if isinstance(k, tuple)]:
-            memo = self.extras.pop(key)[0]
-            owned += ([memo["ambiguous"], memo.get("tail")]
-                      if key[0] == "dict_ctx" else [memo])
-        for df in owned:
-            if df is not None:
-                caches.free(df)
+        """Free the model's six tables (see ``caches``)."""
+        for df in self.tables():
+            caches.free(df)
         return self
 
 
@@ -180,30 +172,21 @@ DICTIONARY_BROADCAST_PAIRS = 200_000
 
 
 def _build_dict_ctx(spark: SparkSession, pages: DataFrame,
-                    redirects: DataFrame, cfg: "PipelineConfig",
-                    extras: dict | None = None) -> dict:
+                    redirects: DataFrame, cfg: "PipelineConfig") -> dict:
     """Dictionary-mode detection context per cfg.dictionary_strategy.
 
-    ``extras`` (a LearnedModel.extras dict) memoizes the built context per
-    (strategy knobs, pages, redirects) WITHIN the model's lifetime — the
-    same per-model reuse pattern as the discovery-excluded cache: the
-    context is a pure function of (pages, redirects, strategy knobs), so a
-    second extract over the same model and tables (e.g. the anchored and
-    unanchored dictionary bench legs) skips the alias-candidate build, the
-    redirect fixpoint loop, the ambiguity aggregation and the head/tail
-    collects. Keyed with the table objects PINNED and identity-checked
-    (the id-recycling rule every cache here follows). A memoized context's
-    tables belong to the model (LearnedModel.unpersist frees them); without
-    ``extras`` they are tracked and ``caches.release`` frees them."""
-    ctx_key = None
-    if extras is not None:
-        ctx_key = ("dict_ctx", cfg.dictionary_strategy, cfg.dictionary_hot_k,
-                   cfg.max_tail_tokens, cfg.dictionary_prune_sentences)
-        cached = extras.get(ctx_key)
-        if (cached is not None and cached[1] is pages
-                and cached[2] is redirects):
-            return cached[0]
-    owned = extras is not None
+    The context is a pure function of (pages, redirects, strategy knobs),
+    so it is kept per those until ``caches.release()`` (``caches.memo``):
+    learn and the extract after it in one session, over the same tables,
+    build it once."""
+    key = ("dict_ctx", cfg.dictionary_strategy, cfg.dictionary_hot_k,
+           cfg.max_tail_tokens, cfg.dictionary_prune_sentences)
+    return caches.memo(key, (pages, redirects),
+                       lambda: _dict_ctx(spark, pages, redirects, cfg))
+
+
+def _dict_ctx(spark: SparkSession, pages: DataFrame, redirects: DataFrame,
+              cfg: "PipelineConfig") -> dict:
     cands = build_alias_candidates(pages, redirects)
     # AMBIGUITY is a dictionary-side property: an alias needs tf-idf
     # disambiguation iff its MATCH KEY maps to >1 entity. Matching happens
@@ -222,13 +205,13 @@ def _build_dict_ctx(spark: SparkSession, pages: DataFrame,
     # split's filters, the hot-head top-k and the head collect: materialize
     # it once (its row count is the alias-pair count), and free it once
     # the context's own tables are built.
-    keyed, n_pairs = caches.materialize(alias_join_keys(cands), owned=True)
+    keyed, n_pairs = caches.materialize(alias_join_keys(cands))
     amb_keys = (keyed.groupBy("key")
                 .agg(F.countDistinct("entity").alias("_n"))
                 .filter(F.col("_n") > 1).select("key"))
     ambiguous, n_ambiguous = caches.materialize(
         keyed.join(F.broadcast(amb_keys), "key", "left_semi")
-        .select("alias").distinct(), owned=owned)
+        .select("alias").distinct())
     # spares every extract a probe of the ambiguous-alias dimension
     ctx = {"ambiguous": ambiguous, "has_ambiguous": n_ambiguous > 0}
     strategy = cfg.dictionary_strategy
@@ -266,7 +249,7 @@ def _build_dict_ctx(spark: SparkSession, pages: DataFrame,
                 "dominates; consider raising max_tail_tokens", n_head,
                 cfg.dictionary_hot_k, cfg.max_tail_tokens)
         tail, n_tail = caches.materialize(
-            tail.select("alias", "entity", "key"), owned=owned)
+            tail.select("alias", "entity", "key"))
         # first-token set (in-scan candidate marking) + witness set
         # (sentence-level match gate, one selective token per tail alias) —
         # both None when pruning is off or the set exceeds the broadcast
@@ -279,8 +262,6 @@ def _build_dict_ctx(spark: SparkSession, pages: DataFrame,
                    first_tok_bc=ft_bc, witness_bc=wit_bc,
                    tail_empty=n_tail == 0)
     caches.free(keyed)
-    if ctx_key is not None:
-        extras[ctx_key] = (ctx, pages, redirects)
     return ctx
 
 
@@ -385,12 +366,9 @@ def learn(
     train_pages = pages.join(train_urls, "url", "left_semi")
 
     redirect_map_bc = collect_redirect_map(spark, redirects)
-    extras = {"redirect_map_bc": redirect_map_bc}
     dict_ctx = None
     if cfg.mention_mode == "dictionary":
-        # memoized in the model's extras under its (pages, redirects, knobs)
-        # key: an extract over the same tables reuses it, any other rebuilds
-        dict_ctx = _build_dict_ctx(spark, pages, redirects, cfg, extras=extras)
+        dict_ctx = _build_dict_ctx(spark, pages, redirects, cfg)
     # Anchors mode takes the single-pass nested-row path (html → candidate
     # rows in one mapInPandas, two fewer corpus-sized shuffles); dictionary
     # mode needs per-sentence tokens for tf-idf ranking, so it keeps the
@@ -445,16 +423,12 @@ def learn(
         type_probs=type_probs,
         rel_stats=rel_stats,
         training_subjects=training_subjects,
-        extras={"training_instances": learned["training_instances"], **extras},
     ).cache()
     # the tables read learn's materialized stages, which caches.release
     # frees: fill their caches now, in one job, so the model outlives that
     # release (the first extract would read them in full anyway)
     reduce(DataFrame.unionAll, (
-        df.select(F.lit(0).alias("_")) for df in (
-            model.pattern_words, model.pattern_stats, model.pattern_types,
-            model.type_probs, model.rel_stats, model.training_subjects))
-    ).count()
+        df.select(F.lit(0).alias("_")) for df in model.tables())).count()
     return model
 
 
@@ -510,30 +484,10 @@ def select_discovery_pages(
         # — identical semantics (¬training ∧ (typed_ok ∨ untyped) ⇔
         # ¬(training ∨ (typed ∧ ¬typed_ok))), but the join against the
         # html-bearing pages is a broadcast anti instead of a shuffled semi.
-        # The excluded dim depends only on (model, types), so it is built
-        # and materialized ONCE per model and shared by every extract
-        # over it (multiple bench legs, repeated extracts, the dictionary
-        # path's several actions) — the per-extract fixed cost of the
-        # inversion is zero after the first call. Keyed on id(types) so a
-        # caller passing a different types table gets a fresh set; the
-        # cached tuple also PINS the keying DataFrame, so CPython cannot
-        # recycle its id() for a different types table while the entry
-        # lives (id reuse after GC would silently serve a stale excluded
-        # set); an identity check backstops any other collision. Released
-        # by model.unpersist().
-        cache_key = ("discovery_excluded", id(types))
-        cached = model.extras.get(cache_key)
-        if cached is not None and cached[2] is not types:
-            cached = None
-        if cached is None:
-            typed_ent = types.select(
-                F.col("entity").alias("title")).distinct()
-            typed_not_ok = typed_ent.join(typed_ok, "title", "left_anti")
-            cached = (*caches.materialize(
-                training_titles.unionByName(typed_not_ok).distinct(),
-                owned=True), types)
-            model.extras[cache_key] = cached
-        excluded, n_excluded = cached[0], cached[1]
+        typed_ent = types.select(F.col("entity").alias("title")).distinct()
+        typed_not_ok = typed_ent.join(typed_ok, "title", "left_anti")
+        excluded, n_excluded = caches.materialize(
+            training_titles.unionByName(typed_not_ok).distinct())
         if n_excluded <= DISCOVERY_EXCLUDE_BROADCAST_ROWS:
             return (
                 pages.withColumn(
@@ -579,19 +533,14 @@ def extract(
     cfg = cfg or PipelineConfig()
     discovery = select_discovery_pages(pages, model, types, cfg)
 
-    # reuse the broadcasts learn() already built (redirect resolution is an
-    # iterative driver loop — a fixed serial cost worth paying exactly once)
-    redirect_map_bc = model.extras.get("redirect_map_bc")
-    if redirect_map_bc is None:
-        redirect_map_bc = collect_redirect_map(spark, redirects)
+    redirect_map_bc = collect_redirect_map(spark, redirects)
     # redlink drop = fact_extractor.py:189-191
     if cfg.mention_mode == "anchors":
         windows = fused_anchor_windows(
             discovery, redirect_map_bc, lang=cfg.lang,
             window=cfg.window, drop_redlinks=True)
     else:
-        dict_ctx = _build_dict_ctx(spark, pages, redirects, cfg,
-                                   extras=model.extras)
+        dict_ctx = _build_dict_ctx(spark, pages, redirects, cfg)
         mentions = _page_mentions(discovery, redirect_map_bc, cfg.lang,
                                   dict_ctx, cfg)
         mentions = mentions.filter(~F.col("entity").contains("redlink=1"))

@@ -1,13 +1,12 @@
 """Golden end-to-end: learn on the fixture corpus, extract on held-out
 pages, evaluate P/R vs ground truth (target >= 0.95, BASELINE.json)."""
 
-import dataclasses
-
 import pytest
 from pyspark.sql import functions as F
 
 from fact_extraction_spark.plans.evaluate import assert_no_leak, evaluate
-from fact_extraction_spark.plans.pipeline import PipelineConfig, extract, learn
+from fact_extraction_spark.plans.pipeline import (
+    LearnedModel, PipelineConfig, extract, learn)
 
 # full learn+extract integration: the slow half of the gate (pytest -m slow)
 pytestmark = pytest.mark.slow
@@ -87,11 +86,9 @@ def test_discovery_cap_is_distributed_topk(spark, tables, model_and_triples):
 
 def test_discovery_excluded_cache_keyed_per_types_table(
         spark, tables, model_and_triples):
-    """Two DIFFERENT types tables through one model must each get a fresh
-    discovery-excluded set (ADVICE r5: an id()-keyed cache could serve a
-    stale set after id reuse). The cache pins the keying DataFrame and
-    identity-checks it, so (a) results reflect the table actually passed,
-    (b) both entries coexist, (c) the pinned object matches the key."""
+    """Two DIFFERENT types tables through one model each get the
+    discovery-excluded set of the table actually passed, in either order
+    and on a repeated call."""
     from fact_extraction_spark.plans.pipeline import select_discovery_pages
 
     model, _ = model_and_triples
@@ -110,19 +107,8 @@ def test_discovery_excluded_cache_keyed_per_types_table(
     n_empty = kept_empty.count()
     assert n_empty >= n_real
 
-    keys = [k for k in model.extras
-            if isinstance(k, tuple) and k[0] == "discovery_excluded"]
-    assert len(keys) >= 2, "each types table gets its own cache entry"
-    for k in keys:
-        entry = model.extras[k]
-        assert len(entry) == 3 and id(entry[2]) == k[1], \
-            "cached tuple pins the keying types DataFrame"
-
-    # repeat call with the real table must reuse its entry, not rebuild
-    n_entries_before = len(model.extras)
     again = select_discovery_pages(tables["pages"], model, tables["types"], cfg)
     assert again.count() == n_real
-    assert len(model.extras) == n_entries_before
 
 
 def test_redirect_alias_objects_resolved(model_and_triples, tables):
@@ -132,25 +118,53 @@ def test_redirect_alias_objects_resolved(model_and_triples, tables):
     assert "Veldt_Haven" not in objs
 
 
-def test_extract_builds_dictionary_context_from_its_own_pages(spark, tables):
-    """A dictionary-mode model learned on one corpus and applied to another
-    must detect mentions with a dictionary built from the pages it is
-    given, not the one learn() built from its own: the triples equal those
-    of the same model with no memoized state."""
+def _renamed(tables):
+    """Redirects that send every fact object X to Moved_X, and the types
+    with each typed X's types given to Moved_X too."""
+    moved = F.concat(F.lit("Moved_"), F.col("obj"))
+    redirects = tables["facts"].select(
+        F.col("obj").alias("alias"), moved.alias("target")).distinct()
+    types = tables["types"].unionByName(
+        tables["types"].join(redirects, F.col("entity") == F.col("alias"))
+        .select(F.col("target").alias("entity"), "type"))
+    return redirects, types
+
+
+@pytest.mark.parametrize("mode", ["anchors", "dictionary"])
+def test_in_session_model_extracts_like_its_tables(spark, tables, mode):
+    """A model learned in the session and the same six tables as a bare
+    LearnedModel return the same triples, over inputs other than learn's:
+    in anchors mode a redirects table that renames every linked object,
+    in dictionary mode pages of another corpus. Nothing learn built on the
+    side may stand in for what extract builds from its own inputs."""
+    from fact_extraction_spark import caches
     from fact_extraction_spark.fixtures import (
         corpus_to_dataframes, generate_corpus)
+    from perfbench.model import TABLES
 
-    cfg = PipelineConfig(articles_limit=0, mention_mode="dictionary")
-    train = corpus_to_dataframes(spark, generate_corpus(seed=0, n_persons=60),
-                                 partitions=6)
+    cfg = PipelineConfig(articles_limit=0, mention_mode=mode)
+    if mode == "anchors":
+        train = tables
+        redirects, types = _renamed(tables)
+    else:
+        train = corpus_to_dataframes(
+            spark, generate_corpus(seed=0, n_persons=60), partitions=6)
+        redirects, types = tables["redirects"], tables["types"]
     model = learn(spark, train["pages"], train["facts"], train["types"],
-                  train["redirects"], cfg)
+                  train["redirects"], cfg,
+                  exclude_subjects=train["ground_truth"])
 
     def triples(m):
-        out = extract(spark, tables["pages"], m, tables["types"],
-                      tables["redirects"], cfg)
+        out = extract(spark, tables["pages"], m, types, redirects, cfg)
         return {(r["subj"], r["pred"], r["obj"]) for r in out.collect()}
 
-    fresh = triples(dataclasses.replace(model, extras={}))
-    assert fresh
-    assert triples(model) == fresh
+    try:
+        in_session = triples(model)
+        bare = triples(LearnedModel(*(getattr(model, n) for n in TABLES)))
+        assert bare
+        assert in_session == bare
+        if mode == "anchors":
+            assert any(o.startswith("Moved_") for _, _, o in bare)
+    finally:
+        model.unpersist()
+        caches.release()

@@ -8,7 +8,7 @@ Invariants under test:
     by the cascade and the filler introduces NO new links, so
   * the extracted triple set is IDENTICAL between a fat and a thin corpus
     at the same (seed, n_persons) — only text-stage byte volume changes
-    (slow tier, through the distributed generator + full pipeline).
+    (slow tier, through the benchmark's corpus writer + full pipeline).
 """
 
 from __future__ import annotations
@@ -18,8 +18,7 @@ import random
 import pytest
 
 from fact_extraction_spark.fixtures import (_filler_paragraphs,
-                                            _person_wikitext,
-                                            generate_bench_corpus)
+                                            _person_wikitext)
 from fact_extraction_spark.textops.wikitext import extract_article_text
 
 
@@ -70,18 +69,18 @@ def test_filler_paragraphs_hit_target_bytes():
 
 @pytest.mark.slow
 def test_fat_thin_triple_set_identical(spark, tmp_path):
-    """Distributed-generator invariant: fat_kb only adds text bytes — the
-    fact tables AND the end-to-end extracted triple set are identical."""
+    """Benchmark-corpus invariant: fat_kb only adds text bytes — the fact
+    tables AND the end-to-end extracted triple set are identical."""
     from pyspark.sql import functions as F
     from fact_extraction_spark.plans.pipeline import (PipelineConfig, extract,
                                                       learn,
                                                       release_pipeline_caches)
+    from perfbench.corpus import write_corpus
 
     outs = {}
     for label, fat in (("thin", 0), ("fat", 8)):
         d = str(tmp_path / label)
-        generate_bench_corpus(spark, seed=11, n_persons=120, out_dir=d,
-                              partitions=8, fat_kb=fat)
+        write_corpus(seed=11, persons=120, fat_kb=fat, out_dir=d, files=8)
         t = {n: spark.read.parquet(f"{d}/{n}.parquet")
              for n in ("pages", "facts", "types", "redirects", "ground_truth")}
         # the non-page tables must be byte-identical fat vs thin

@@ -208,12 +208,14 @@ def test_dictionary_strategy_auto_switch(spark, tables, monkeypatch):
     ctx = pipeline._build_dict_ctx(
         spark, tables["pages"], tables["redirects"], cfg)
     assert ctx["mode"] == "broadcast"
+    # the context is kept per its inputs until release
+    caches.release()
 
     monkeypatch.setattr(pipeline, "DICTIONARY_BROADCAST_PAIRS", 0)
     ctx2 = pipeline._build_dict_ctx(
         spark, tables["pages"], tables["redirects"], cfg)
     assert ctx2["mode"] == "mapside"
-    caches.free(ctx2["tail"])
+    caches.release()
 
 
 def test_capitalize_colliding_redirects_resolve_identically(spark):
@@ -293,7 +295,7 @@ def test_unanchored_mapside_prune_identical_through_pipeline(spark, tables):
         outs.append(sorted(
             (r["url"], r["sent_id"], r["start"], r["end"], r["entity"])
             for r in m.collect()))
-        caches.free(ctx["tail"])
+    caches.release()
     assert outs[0] == outs[1] and outs[0]
 
 

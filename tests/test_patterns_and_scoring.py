@@ -203,6 +203,34 @@ def test_cap_training_facts_deterministic(spark):
     assert {(r["pred"], r["count"]) for r in got} == {("a", 3), ("b", 3)}
 
 
+@pytest.mark.parametrize("limit", [1, 50])
+def test_cap_training_facts_ranks_distinct_predicates(spark, tables, limit):
+    """The relation cap ranks the distinct predicates, not the fact rows:
+    the facts kept equal those of a dense rank over every row, and every
+    operator that gathers rows into one partition reads the distinct-pred
+    aggregate, never the fact table."""
+    from pyspark.sql import Window
+
+    facts = tables["facts"]
+    over_rows = (
+        facts.withColumn("_pr", F.dense_rank().over(Window.orderBy("pred")))
+        .filter(F.col("_pr") <= limit).drop("_pr")
+        .withColumn("_fr", F.row_number().over(
+            Window.partitionBy("pred").orderBy("subj", "obj")))
+        .filter(F.col("_fr") <= 2000).drop("_fr"))
+    capped = cap_training_facts(facts, relation_types_limit=limit)
+    assert ({tuple(r) for r in capped.select("subj", "pred", "obj").collect()}
+            == {tuple(r) for r in over_rows.collect()})
+
+    lines = capped._jdf.queryExecution().executedPlan().toString() \
+        .splitlines()
+    gathers = [i for i, line in enumerate(lines)
+               if "SinglePartition" in line or "TakeOrderedAndProject" in line]
+    assert gathers
+    for i in gathers:
+        assert "HashAggregate(keys=[pred" in lines[i + 1], lines[i:i + 2]
+
+
 def test_pattern_coverage_and_diversity(spark):
     """Coverage (wikipedia_pattern_extractor.py:276-307) and diversity
     (pattern.py:53-73) aggregates on hand-built model tables."""

@@ -31,8 +31,8 @@ def stage_plans(monkeypatch):
     the plans built over the boundary start at its rows."""
     plans = []
 
-    def recording(df, owned=False):
-        out = orig(df, owned)
+    def recording(df):
+        out = orig(df)
         plans.append(_executed_plan(df))
         return out
     orig = caches.materialize
