@@ -97,11 +97,10 @@ def cap_training_facts(
     if exclude_subjects is not None:
         df = df.join(exclude_subjects.select("subj").distinct(),
                      "subj", "left_anti")
-    # rank the distinct predicates, not the fact rows: the unpartitioned
-    # window then moves a dimension-sized table to one partition
-    kept = (df.select("pred").distinct()
-            .withColumn("_pr", F.row_number().over(Window.orderBy("pred")))
-            .filter(F.col("_pr") <= relation_types_limit).select("pred"))
+    # the first predicates by name: a distributed top-k over the distinct
+    # predicates (TakeOrderedAndProject), no window over one partition
+    kept = (df.select("pred").distinct().orderBy("pred")
+            .limit(relation_types_limit))
     df = df.join(F.broadcast(kept), "pred", "left_semi")
     fact_rank = F.row_number().over(
         Window.partitionBy("pred").orderBy("subj", "obj"))

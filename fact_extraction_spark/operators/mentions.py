@@ -417,29 +417,12 @@ def _resolve_redirects_fixpoint(redirects: DataFrame,
     return resolved
 
 
-def build_alias_table(pages: DataFrame, redirects: DataFrame) -> DataFrame:
-    """(alias, entity) with alias in display form ("Foo Bar").
-
-    Aliases: every page title (identity) ∪ every resolved redirect alias.
-    The capitalize hotfix is applied to targets (reference
-    tagged_sentence.py:232-233).
-    """
-    titles = pages.select(strip_name("url").alias("title")).distinct()
-    identity = titles.select(
-        F.replace(F.col("title"), F.lit("_"), F.lit(" ")).alias("alias"),
-        capitalize_first("title").alias("entity"),
-    )
-    rd = resolve_redirects(redirects).select(
-        F.replace(F.col("alias"), F.lit("_"), F.lit(" ")).alias("alias"),
-        capitalize_first("target").alias("entity"),
-    )
-    return identity.unionByName(rd).dropDuplicates(["alias"])
-
-
 def build_alias_candidates(pages: DataFrame, redirects: DataFrame) -> DataFrame:
     """(alias, entity) keeping EVERY candidate entity per alias.
 
-    Same construction as ``build_alias_table`` but ambiguity-preserving: an
+    Aliases: every page title (identity) ∪ every resolved redirect alias,
+    in display form ("Foo Bar"); the capitalize hotfix is applied to
+    targets (reference tagged_sentence.py:232-233). Ambiguity-preserving: an
     alias that is both a page title and a redirect source (or redirects to
     several targets across case variants) yields one row per candidate. The
     stage-2b tf-idf ranking (operators/link_ranking.py) picks the winner per

@@ -16,11 +16,11 @@ joins + column math (whole-stage codegen; no Python in the loop):
 * weighted arithmetic mean with weights [subj_wp, obj_wp, 0.15, 1.0]
   (:41-47), None-scores dropped and weights renormalized.
 
-The learned-pattern tables are tiny (≤50 relations); every join against
-them is a broadcast — the corpus-sized candidate table never shuffles.
-This is the reference's broadcast nested-loop "score every candidate
-against every pattern" (fact_extractor.py:87-95) with the type gate
-(fact_extractor.py:97-109) applied as a semi-join *before* scoring.
+The learned per-relation tables are tiny (≤50 relations) and are joined as
+one broadcast relation table — the corpus-sized candidate table never
+shuffles. This is the reference's broadcast nested-loop "score every
+candidate against every pattern" (fact_extractor.py:87-95) with the type
+gate (fact_extractor.py:97-109) applied as a semi-join *before* scoring.
 """
 
 from __future__ import annotations
@@ -105,7 +105,7 @@ def _gate_pairs(types: DataFrame, pattern_types: DataFrame, side: str) -> DataFr
 
 
 def fused_side_scores(types: DataFrame, pattern_types: DataFrame,
-                      type_probs: DataFrame, pattern_stats: DataFrame,
+                      type_probs: DataFrame, preds: DataFrame,
                       n_types: DataFrame, ents_both: DataFrame,
                       allow_unknown_entity_types: bool) -> DataFrame:
     """(entity, side, pred, type_score) for BOTH candidate sides in ONE
@@ -122,7 +122,8 @@ def fused_side_scores(types: DataFrame, pattern_types: DataFrame,
     and an (entity, pred) holding a gate match but zero probability mass
     sums to NULL → coalesce 0 → dropped by the same >0 early-exit filter —
     pattern_matcher.py:31-37). ``ents_both`` is the labelled candidate
-    entity set: (entity, side) with side ∈ {subject, object}.
+    entity set: (entity, side) with side ∈ {subject, object}; ``preds`` holds
+    one row per scored relation (the type-less entities' rows).
     Equivalence is pinned by test_fused_side_scores_matches_reference."""
     gate_dim = (pattern_types.select("side", "pred", "type")
                 .withColumn("probability", F.lit(None).cast("double"))
@@ -146,10 +147,9 @@ def fused_side_scores(types: DataFrame, pattern_types: DataFrame,
     if allow_unknown_entity_types:
         # type-less entities score None for every learned relation
         # (weights renormalize downstream)
-        all_preds = F.broadcast(pattern_stats.select("pred").distinct())
         unknown = (
             ents_both.join(n_types, "entity", "left_anti")
-            .crossJoin(all_preds)
+            .crossJoin(F.broadcast(preds))
             .select("entity", "side", "pred",
                     F.lit(None).cast("double").alias("type_score")))
         typed = typed.unionByName(unknown)
@@ -173,8 +173,10 @@ def score_candidates(
 
     ``windows`` is the SLIM_KEY projection of
     ``lexical_patterns.candidate_windows`` over discovery pages: SLIM_KEY +
-    ``rel_pos``, ``n_slots``, ``slot_keys``. All learned tables are
-    broadcast dims.
+    ``rel_pos``, ``n_slots``, ``slot_keys``. The per-relation model tables
+    (``pattern_stats``, ``pattern_words``' keys per relation and, with type
+    matching, ``rel_stats``' two weights) become ONE relation table, joined
+    once as a broadcast; the type-score side table is the only other join.
 
     ``type_matching=False`` reproduces the reference exactly
     (fact_extractor.py:135-141 + pattern_matcher.py:24-25): every candidate
@@ -206,6 +208,21 @@ def score_candidates(
             "url", "sent_id", "rel_pos",
         )
 
+    # ---- the relation table: per scorable relation, its pattern stats,
+    # learned (slot, word) keys and, with type matching, both type weights
+    # (≤ relation_types_limit rows, one broadcast) ----
+    learned_keys = pattern_words.groupBy("pred").agg(
+        F.collect_list(_slot_key(F.col("slot"), F.col("word")))
+        .alias("learned_keys"))
+    scorable = pattern_stats.filter(F.col("total_words") > 0)
+    relations = scorable.join(learned_keys, "pred", "left")
+    if type_matching:
+        relations = relations.join(rel_stats.select(
+            "pred",
+            F.col("subject_weighted_probability").alias("swp"),
+            F.col("object_weighted_probability").alias("owp")), "pred")
+    relations = F.broadcast(relations)
+
     if type_matching:
         # ---- reasonable-relations gate + type score + early exit, both
         # sides in ONE side table: the candidates' labelled (entity, side)
@@ -224,10 +241,12 @@ def score_candidates(
         # the side table (candidate entities × admissible preds) sits behind
         # aggregates whose size Catalyst cannot estimate, so materialize it
         # and measure it once: a broadcast keeps the corpus-sized candidate
-        # table from shuffling
+        # table from shuffling. Its type-less rows take their preds from
+        # pattern_stats, not the relation table: one job fewer, and the
+        # relation join drops the same rows.
         sides, n_sides = caches.materialize(fused_side_scores(
-            types, pattern_types, type_probs, pattern_stats, n_types,
-            ents_both, allow_unknown_entity_types))
+            types, pattern_types, type_probs, scorable.select("pred"),
+            n_types, ents_both, allow_unknown_entity_types))
         small = n_sides <= SIDE_BROADCAST_ROWS
 
         def side_table(side: str) -> DataFrame:
@@ -240,20 +259,14 @@ def score_candidates(
         scored = (
             cands.join(side_table("subject"), "subject")
             .join(side_table("object"), ["object", "pred"])
+            .join(relations, "pred")
         )
     else:
         # reasonable_relations = ALL learned relations
         # (fact_extractor.py:140-141)
-        scored = cands.crossJoin(
-            F.broadcast(pattern_stats.select("pred").distinct()))
+        scored = cands.crossJoin(relations)
 
     # ---- syntax score (|candidate ∩ learned (slot, word) pairs|) ----
-    pattern_keys = F.broadcast(
-        pattern_words.groupBy("pred").agg(
-            F.collect_list(_slot_key(F.col("slot"), F.col("word")))
-            .alias("learned_keys")))
-    stats = F.broadcast(pattern_stats.filter(F.col("total_words") > 0))
-    scored = scored.join(stats, "pred").join(pattern_keys, "pred", "left")
     matches = F.when(F.col("learned_keys").isNull(), F.lit(0)).otherwise(
         F.size(F.array_intersect("slot_keys", "learned_keys")))
     avg_learned = F.col("total_words") / F.col("covered_sentences")
@@ -275,12 +288,6 @@ def score_candidates(
     scored = scored.withColumn("position_score", pos)
 
     # ---- weighted mean with None-dropping renormalization ----
-    scored = scored.join(
-        F.broadcast(rel_stats.select(
-            "pred",
-            F.col("subject_weighted_probability").alias("swp"),
-            F.col("object_weighted_probability").alias("owp"))),
-        "pred")
     st, ot = F.col("subject_type_score"), F.col("object_type_score")
     w_st = F.when(st.isNull(), 0.0).otherwise(F.col("swp"))
     w_ot = F.when(ot.isNull(), 0.0).otherwise(F.col("owp"))

@@ -432,13 +432,6 @@ def learn(
     return model
 
 
-# max size of select_discovery_pages' EXCLUDED title set (training
-# subjects ∪ gate-failing typed entities) for the broadcast anti-join that
-# keeps the html-bearing pages table out of every exchange; above it, the
-# slim semi-join fallback runs
-DISCOVERY_EXCLUDE_BROADCAST_ROWS = 2_000_000
-
-
 def select_discovery_pages(
     pages: DataFrame,
     model: LearnedModel,
@@ -451,58 +444,34 @@ def select_discovery_pages(
     ``articles_limit`` cap by url order (divergence: reference is
     file-order).
 
-    Shape for scale: the gate usually KEEPS almost the whole corpus (it
-    only drops training subjects and wrong-typed entities), so expressing
-    it as ``pages semi-join keep`` shuffles the html-bearing pages table
-    against a corpus-sized url set — measured as a SortMergeJoin exchanging
-    every html payload both ways (the single biggest byte-mover in the
-    extract plan). Instead, when the EXCLUDED side is dimension-derivable
-    (``allow_unknown_entity_types``, the default), gate with a broadcast
-    ANTI-join against the excluded titles (training subjects ∪ typed
-    entities whose types miss the subject gate): html then never leaves
-    its scan stage — the mapInPandas extraction fuses directly onto the
-    parquet scan with zero page-table exchange. One dimension-side count
-    picks the strategy; above ``DISCOVERY_EXCLUDE_BROADCAST_ROWS`` (or with
-    ``articles_limit``, whose kept set is already a bounded broadcast) the
-    original slim semi-join path runs instead. At 10^12 documents the
-    right layout is pages bucketed by url so even that fallback semi-join
-    is co-located and exchange-free."""
-    titled = pages.select("url").withColumn(
-        "title", capitalize_first(strip_name("url")))
-    training_titles = model.training_subjects.select(
-        F.col("subj").alias("title"))
-
-    valid_types = model.pattern_types.filter(
-        F.col("side") == "subject").select("type").distinct()
-    typed_ok = (
-        types.join(F.broadcast(valid_types), "type")
-        .select(F.col("entity").alias("title")).distinct()
-    )
-
-    if not cfg.articles_limit and cfg.allow_unknown_entity_types:
-        # inverted gate: keep ⇔ title ∉ (training ∪ typed-but-gate-failing)
-        # — identical semantics (¬training ∧ (typed_ok ∨ untyped) ⇔
-        # ¬(training ∨ (typed ∧ ¬typed_ok))), but the join against the
-        # html-bearing pages is a broadcast anti instead of a shuffled semi.
-        typed_ent = types.select(F.col("entity").alias("title")).distinct()
-        typed_not_ok = typed_ent.join(typed_ok, "title", "left_anti")
-        excluded, n_excluded = caches.materialize(
-            training_titles.unionByName(typed_not_ok).distinct())
-        if n_excluded <= DISCOVERY_EXCLUDE_BROADCAST_ROWS:
-            return (
-                pages.withColumn(
-                    "title", capitalize_first(strip_name("url")))
-                .join(F.broadcast(excluded), "title", "left_anti")
-                .drop("title"))
-
-    non_training = titled.join(training_titles, "title", "left_anti")
-    gated = non_training.join(typed_ok, "title", "left_semi")
+    The gate is one aggregation over ``types``: each entity's types are
+    left-joined to the broadcast subject-side gate types, which carry a
+    flag, and ``max(flag)`` is 1 for an entity with a gate type and NULL
+    for one whose types all miss it. The pages are then joined once, on
+    title, against a broadcast title set: with unknown types allowed, an
+    anti-join against the gate-failing entities UNION ALL the training
+    subjects (¬training ∧ (typed_ok ∨ untyped) ⇔ ¬(training ∨ (typed ∧
+    ¬typed_ok))); otherwise a semi-join against the gate-passing entities
+    that are not training subjects. Either set holds at most the distinct
+    entities of ``types`` plus the training subjects, so the html-bearing
+    pages table never enters an exchange. Nothing runs until the result
+    is read."""
+    gate_types = F.broadcast(model.pattern_types.filter(
+        F.col("side") == "subject").select("type", F.lit(1).alias("_ok")))
+    gate = (types.join(gate_types, "type", "left")
+            .groupBy(F.col("entity").alias("title"))
+            .agg(F.max("_ok").alias("_ok")))
+    training = model.training_subjects.select(F.col("subj").alias("title"))
     if cfg.allow_unknown_entity_types:
-        untyped = non_training.join(
-            types.select(F.col("entity").alias("title")).distinct(),
-            "title", "left_anti")
-        gated = gated.unionByName(untyped)
-    keep = gated.select("url")
+        titles = gate.filter(F.col("_ok").isNull()).select("title") \
+            .unionAll(training)
+        how = "left_anti"
+    else:
+        titles = gate.filter(F.col("_ok") == 1).select("title") \
+            .join(F.broadcast(training), "title", "left_anti")
+        how = "left_semi"
+    kept = (pages.withColumn("title", capitalize_first(strip_name("url")))
+            .join(F.broadcast(titles), "title", how).drop("title"))
     if cfg.articles_limit:
         # Distributed top-k: orderBy+limit on a slim (url) projection plans
         # as TakeOrderedAndProject (per-partition top-k, then one merge of k
@@ -510,8 +479,9 @@ def select_discovery_pages(
         # funnel the whole discovery corpus through a single task. The kept
         # url set is at most articles_limit rows, so the semi-join back is a
         # broadcast.
-        keep = F.broadcast(keep.orderBy("url").limit(cfg.articles_limit))
-    return pages.join(keep, "url", "left_semi")
+        keep = kept.select("url").orderBy("url").limit(cfg.articles_limit)
+        kept = pages.join(F.broadcast(keep), "url", "left_semi")
+    return kept
 
 
 def extract(

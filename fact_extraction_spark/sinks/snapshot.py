@@ -35,6 +35,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fact_extraction_spark import caches
+
 LINEAGE_SCHEMA = ("snapshot_id string, part_id int, stage string, "
                   "status string, row_count long")
 
@@ -71,20 +73,27 @@ def commit_partitions(spark: SparkSession, df: DataFrame, base: str,
     """Write ``df`` (must carry ``part_id``) into the table and commit
     lineage for exactly the partitions written. Returns commit summary.
 
+    The not-yet-committed rows are computed once, into one materialized
+    table: the per-partition counts in lineage and the data written both
+    read that table, so ``row_count`` is the count of the rows written.
+
     Idempotent under kill/rerun: data lands via dynamic partition overwrite,
     lineage is appended only after the data job succeeds, and readers trust
     lineage only.
     """
-    remaining = remaining_input(spark, df, base, stage)
+    remaining, rows = caches.materialize(
+        remaining_input(spark, df, base, stage))
+    if rows == 0:
+        caches.free(remaining)
+        return {"snapshot_id": None, "parts": 0, "rows": 0}
     counts = [(r["part_id"], r["cnt"]) for r in
               remaining.groupBy("part_id").agg(F.count("*").alias("cnt")).collect()]
-    if not counts:
-        return {"snapshot_id": None, "parts": 0, "rows": 0}
 
     data_dir = os.path.join(base, "data")
     (remaining.write.mode("overwrite")
      .option("partitionOverwriteMode", "dynamic")
      .partitionBy("part_id").parquet(data_dir))
+    caches.free(remaining)
 
     snapshot_id = uuid.uuid4().hex[:12]
     lineage_rows = [(snapshot_id, int(p), stage, "committed", int(c))
@@ -92,8 +101,7 @@ def commit_partitions(spark: SparkSession, df: DataFrame, base: str,
     (spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA)
      .coalesce(1).write.mode("append")
      .parquet(os.path.join(base, "_lineage")))
-    return {"snapshot_id": snapshot_id, "parts": len(counts),
-            "rows": sum(c for _, c in counts)}
+    return {"snapshot_id": snapshot_id, "parts": len(counts), "rows": rows}
 
 
 def read_committed(spark: SparkSession, base: str, stage: str) -> DataFrame:

@@ -81,6 +81,26 @@ def test_snapshot_commit_read_roundtrip(spark, tmp_path):
     assert per_part == got
 
 
+def test_snapshot_commit_evaluates_input_once(spark, tmp_path):
+    """The rows counted into lineage and the rows written come from one
+    evaluation of the input: a UDF in it runs once per row."""
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def subject(i):
+        calls.add(1)
+        return f"S{i}"
+
+    n = 50
+    df = spark.range(n).select(subject("id").alias("subj"),
+                               F.lit("p").alias("pred"))
+    result = snap.commit_partitions(
+        spark, snap.with_part_id(df, "subj", num_parts=4),
+        str(tmp_path / "table"), stage="triples")
+    assert result["rows"] == n
+    assert calls.value == n
+
+
 def test_snapshot_resume_no_dupes_no_gaps(spark, tmp_path):
     """Kill-and-rerun: commit a subset of partitions, then rerun the full
     input — only the missing partitions are processed; nothing duplicates."""
@@ -120,7 +140,7 @@ def test_dictionary_mode_kill_rerun_resume(spark, tables, tmp_path):
     Next #5): the anchors path's resume guarantee is covered by the
     unit-level lineage test above, but dictionary mode carries extra
     persisted state (dict_ctx automaton/candidates, the ambiguous-alias
-    set, the discovery-excluded set) that a rerun must rebuild from scratch.
+    set) that a rerun must rebuild from scratch.
 
     Run 1 extracts in dictionary(mapside) mode and "dies" after committing
     a prefix of partitions, plus one orphan data partition written without
@@ -169,7 +189,7 @@ def test_dictionary_mode_kill_rerun_resume(spark, tables, tmp_path):
     release_pipeline_caches()
     spark.catalog.clearCache()
 
-    # cold rerun rebuilds dict_ctx / ambiguous set / excluded set and
+    # cold rerun rebuilds dict_ctx / ambiguous set and
     # resumes: only the uncommitted parts (incl. the orphan) are new work
     model2, full2 = cold_run()
     r2 = snap.commit_partitions(spark, full2, base, stage="triples")

@@ -84,11 +84,11 @@ def test_discovery_cap_is_distributed_topk(spark, tables, model_and_triples):
     assert got == expected
 
 
-def test_discovery_excluded_cache_keyed_per_types_table(
+def test_discovery_gate_follows_types_table_passed(
         spark, tables, model_and_triples):
     """Two DIFFERENT types tables through one model each get the
-    discovery-excluded set of the table actually passed, in either order
-    and on a repeated call."""
+    discovery gate of the table actually passed, in either order and on a
+    repeated call."""
     from fact_extraction_spark.plans.pipeline import select_discovery_pages
 
     model, _ = model_and_triples

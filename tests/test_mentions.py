@@ -5,7 +5,7 @@ from fact_extraction_spark import caches
 from fact_extraction_spark.operators.extract_text import explode_sentences, extract_text
 from fact_extraction_spark.operators.mentions import (
     anchor_mention_rows,
-    build_alias_table,
+    build_alias_candidates,
     collect_alias_broadcast,
     collect_redirect_map,
     detect_dictionary_mentions,
@@ -61,7 +61,7 @@ def test_anchor_mentions_resolve_aliases(spark, tables):
 def test_dictionary_mentions_find_unlinked_entities(spark, tables):
     sents = explode_sentences(extract_text(tables["pages"], lang=None))
     alias_bc = collect_alias_broadcast(
-        spark, build_alias_table(tables["pages"], tables["redirects"]))
+        spark, build_alias_candidates(tables["pages"], tables["redirects"]))
     hits = detect_dictionary_mentions(sents, alias_bc)
     got = {r["entity"] for r in hits.select("entity").distinct().collect()}
     assert "Grandmere_City" in got  # hub entity found by dictionary scan
@@ -74,7 +74,7 @@ def test_anchor_and_dictionary_agree_on_linked_spans(spark, tables):
     sents = explode_sentences(extract_text(tables["pages"], lang=None)).cache()
     rmap = collect_redirect_map(spark, tables["redirects"])
     alias_bc = collect_alias_broadcast(
-        spark, build_alias_table(tables["pages"], tables["redirects"]))
+        spark, build_alias_candidates(tables["pages"], tables["redirects"]))
     anchor = anchor_mention_rows(scan_kernel(sents, redirect_map_bc=rmap)) \
         .select("url", "sent_id", "start", "end", "entity")
     dictm = detect_dictionary_mentions(sents, alias_bc).select(
@@ -103,8 +103,6 @@ def test_fused_anchor_equals_chained(spark, tables):
 def test_fused_dictionary_equals_chained(spark, tables):
     """Dictionary hits: the kernel over pages is row-identical to the
     declared sentence-row query over the stage-1 chain."""
-    from fact_extraction_spark.operators.mentions import (
-        build_alias_candidates)
     alias_bc = collect_alias_broadcast(
         spark, build_alias_candidates(tables["pages"], tables["redirects"]))
     sents = explode_sentences(extract_text(tables["pages"], lang="en"))

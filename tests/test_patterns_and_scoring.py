@@ -206,9 +206,9 @@ def test_cap_training_facts_deterministic(spark):
 @pytest.mark.parametrize("limit", [1, 50])
 def test_cap_training_facts_ranks_distinct_predicates(spark, tables, limit):
     """The relation cap ranks the distinct predicates, not the fact rows:
-    the facts kept equal those of a dense rank over every row, and every
-    operator that gathers rows into one partition reads the distinct-pred
-    aggregate, never the fact table."""
+    the facts kept equal those of a dense rank over every row, the first
+    predicates are a distributed top-k, and no window runs without a
+    partition spec (which would gather its input into one partition)."""
     from pyspark.sql import Window
 
     facts = tables["facts"]
@@ -222,13 +222,16 @@ def test_cap_training_facts_ranks_distinct_predicates(spark, tables, limit):
     assert ({tuple(r) for r in capped.select("subj", "pred", "obj").collect()}
             == {tuple(r) for r in over_rows.collect()})
 
-    lines = capped._jdf.queryExecution().executedPlan().toString() \
-        .splitlines()
-    gathers = [i for i, line in enumerate(lines)
-               if "SinglePartition" in line or "TakeOrderedAndProject" in line]
-    assert gathers
-    for i in gathers:
-        assert "HashAggregate(keys=[pred" in lines[i + 1], lines[i:i + 2]
+    assert "TakeOrderedAndProject" in \
+        capped._jdf.queryExecution().executedPlan().toString()
+
+    def nodes(node):
+        yield node
+        for i in range(node.children().size()):
+            yield from nodes(node.children().apply(i))
+    windows = [n for n in nodes(capped._jdf.queryExecution().sparkPlan())
+               if n.nodeName() == "Window"]
+    assert windows and all(n.partitionSpec().nonEmpty() for n in windows)
 
 
 def test_pattern_coverage_and_diversity(spark):
@@ -465,11 +468,12 @@ def test_fused_side_scores_matches_reference(spark):
         (r["entity"], r["side"], r["pred"],
          None if r["type_score"] is None else round(r["type_score"], 9))
         for r in fused_side_scores(
-            types, pattern_types, type_probs, pattern_stats,
+            types, pattern_types, type_probs, pattern_stats.select("pred"),
             n_types, ents_both, True).collect())
 
     assert got == expected and got, got
     # and with allow_unknown off, the NULL rows disappear on both sides
     got_known = fused_side_scores(types, pattern_types, type_probs,
-                                  pattern_stats, n_types, ents_both, False)
+                                  pattern_stats.select("pred"), n_types,
+                                  ents_both, False)
     assert got_known.filter(F.col("type_score").isNull()).count() == 0
