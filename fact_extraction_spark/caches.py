@@ -21,8 +21,8 @@ while a DataFrame built over a tracked table is still to be read.
 Reuse. ``memo(name, objs, build)`` keeps ``build()`` per ``name`` and the
 identities of ``objs`` until ``release()``, which drops every entry along
 with the tables its build materialized. It serves what one session builds
-twice from the same inputs: the resolved redirects, the broadcast redirect
-map, the dictionary context.
+twice from the same inputs: the resolved redirects with their broadcast
+map (one entry, one collect), and the dictionary context.
 
 Fault model. A task that fails while reading a checkpoint re-reads its
 blocks, so task retry leaves the output identical. A local checkpoint's

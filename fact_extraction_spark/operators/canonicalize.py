@@ -14,14 +14,16 @@ item 3; Kiveris et al., "Connected Components in MapReduce and Beyond",
 SoCC'14): each round is two join+agg passes over the edge set and the round
 count is O(log diameter) — a pathological alias chain of length d converges
 in ~log₂(d) rounds where plain min-label propagation costs d. A fixpoint
-guard caps iterations and asserts convergence (SURVEY.md §7.4);
-``localCheckpoint`` per round cuts lineage.
+guard caps iterations and asserts convergence (SURVEY.md §7.4); each
+round is one ``caches.materialize``, and the round before it is freed.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from fact_extraction_spark import caches
 
 
 def _large_star(directed: DataFrame) -> DataFrame:
@@ -73,19 +75,15 @@ def connected_components(edges: DataFrame, max_iterations: int = 20) -> DataFram
         edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
     )
-    vertices = (
+    vertices, _ = caches.materialize(
         sym.select(F.col("src").alias("vertex"))
         .unionByName(sym.select(F.col("dst").alias("vertex")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+        .distinct())
     # canonical orientation: (u, v) with v < u
-    directed = (
+    directed, _ = caches.materialize(
         sym.select(F.greatest("src", "dst").alias("u"),
                    F.least("src", "dst").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+        .distinct())
 
     def _signature(d: DataFrame) -> tuple:
         # xxhash64 summed order-independently: a wrong early break needs
@@ -101,8 +99,9 @@ def connected_components(edges: DataFrame, max_iterations: int = 20) -> DataFram
 
     sig = _signature(directed)
     for _ in range(max_iterations):
-        directed = _small_star(_large_star(directed)) \
-            .localCheckpoint(eager=True)
+        previous = directed
+        directed, _ = caches.materialize(_small_star(_large_star(directed)))
+        caches.free(previous)
         new_sig = _signature(directed)
         if new_sig == sig:
             break

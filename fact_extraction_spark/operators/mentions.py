@@ -371,50 +371,55 @@ def _capitalize(name: str) -> str:
 
 
 # --------------------------------------------------------------------------
-# alias dictionary construction (DataFrame-side, fully relational)
+# redirects (resolved on the driver) and the alias dictionary
 # --------------------------------------------------------------------------
 
-def resolve_redirects(redirects: DataFrame, max_hops: int = 8) -> DataFrame:
-    """Collapse multi-hop redirect chains: (alias, final_target).
-
-    Iterative self-join until fixpoint (alias chains are short; the loop is
-    over a SMALL dimension table, never the corpus). Generalizes the
-    reference's single-hop dict substitution (redirects_substitutor.py:52-64).
-
-    The fixpoint loop is DRIVER-SERIAL (a materialized hop + one agg per
-    hop), so the lineage-free result is kept per redirects table until
-    ``caches.release()`` (``caches.memo``): it serves both the redirect map
-    and the alias candidates of a dictionary extract.
-    """
-    return caches.memo(
-        ("resolve_redirects", max_hops), (redirects,),
-        lambda: _resolve_redirects_fixpoint(redirects, max_hops))
-
-
-def _resolve_redirects_fixpoint(redirects: DataFrame,
-                                max_hops: int) -> DataFrame:
-    resolved = redirects.select("alias", "target")
-    previous = None
+def resolve_redirect_pairs(pairs, max_hops: int = 8) -> list[tuple]:
+    """Collapse multi-hop redirect chains: (alias, final target) pairs,
+    deduplicated, in first-seen order. A hop replaces each pair (a, t) with
+    (a, n or t) for every pair (t, n), or keeps it when none matches; NULL
+    never matches. Hops run while one finds a non-NULL n, at most
+    ``max_hops``; each doubles the links a pair skips, so a chain of at most
+    2^max_hops links resolves to its end. Generalizes the reference's
+    single-hop dict substitution (redirects_substitutor.py:52-64)."""
+    resolved = dict.fromkeys(pairs)
     for _ in range(max_hops):
-        stepped = (
-            resolved.alias("r")
-            .join(resolved.alias("n"), F.col("r.target") == F.col("n.alias"), "left")
-            .select(
-                F.col("r.alias").alias("alias"),
-                F.coalesce(F.col("n.target"), F.col("r.target")).alias("target"),
-                (F.col("n.target").isNotNull()).alias("changed"),
-            )
-        )
-        # cut lineage per hop; the hop before is then no longer read
-        stepped, _ = caches.materialize(stepped)
-        if previous is not None:
-            caches.free(previous)
-        previous = stepped
-        any_changed = stepped.agg(F.max("changed")).first()[0]
-        resolved = stepped.drop("changed")
-        if not any_changed:
+        nexts: dict = {}
+        for alias, target in resolved:
+            if alias is not None:
+                nexts.setdefault(alias, []).append(target)
+        if all(n is None for _, t in resolved for n in nexts.get(t, ())):
             break
-    return resolved
+        resolved = dict.fromkeys((a, t if n is None else n) for a, t in resolved
+                                 for n in nexts.get(t) or (None,))
+    return list(resolved)
+
+
+def _redirects(redirects: DataFrame, max_hops: int = 8):
+    # (resolved DataFrame, broadcast map), both from one collect
+    def build():
+        spark = redirects.sparkSession
+        pairs = resolve_redirect_pairs(
+            [tuple(r) for r in redirects.select("alias", "target").collect()],
+            max_hops)
+        mapping: dict[str, str] = {}
+        for alias, target in pairs:
+            alias, target = _capitalize(alias), _capitalize(target)
+            old = mapping.get(alias)
+            if old is None or target is not None and target < old:
+                mapping[alias] = target
+        return (spark.createDataFrame(pairs, "alias string, target string"),
+                spark.sparkContext.broadcast(mapping))
+    return caches.memo(("redirects", max_hops), (redirects,), build)
+
+
+def resolve_redirects(redirects: DataFrame, max_hops: int = 8) -> DataFrame:
+    """(alias, target): ``resolve_redirect_pairs`` of the table, resolved
+    once on the driver from the one collect that also builds the redirect
+    map, and shipped back from there; kept until ``caches.release()``. The
+    driver holds the table once, as the map needs; the cost of that at
+    10^7 redirects is unmeasured."""
+    return _redirects(redirects, max_hops)[0]
 
 
 def build_alias_candidates(pages: DataFrame, redirects: DataFrame) -> DataFrame:
@@ -450,17 +455,11 @@ def collect_redirect_map(spark: SparkSession, redirects: DataFrame):
     """Broadcast {alias → final target} (underscore form, capitalized).
 
     When two aliases collapse to the same capitalized form with different
-    targets, the smallest target wins, so the map is deterministic. Kept
-    per redirects table until ``caches.release()``: learn and the extract
-    after it in one session broadcast it once."""
-    def build():
-        mapping: dict[str, str] = {}
-        for r in resolve_redirects(redirects).collect():
-            alias, target = _capitalize(r["alias"]), _capitalize(r["target"])
-            if alias not in mapping or target < mapping[alias]:
-                mapping[alias] = target
-        return spark.sparkContext.broadcast(mapping)
-    return caches.memo("redirect_map", (redirects,), build)
+    targets, the smallest target wins (NULL only when no other is there),
+    so the map is deterministic. Built from ``resolve_redirects``' one
+    collect (one Spark job) and kept with it until ``caches.release()``:
+    learn and the extract after it in one session broadcast it once."""
+    return _redirects(redirects)[1]
 
 
 # --------------------------------------------------------------------------

@@ -201,8 +201,8 @@ def _dict_ctx(spark: SparkSession, pages: DataFrame, redirects: DataFrame,
     # the whole ranking subplan (profiles, idf, context vectors, cosine,
     # per-span window) with identical semantics — top-1 of a single
     # candidate is that candidate regardless of score.
-    # The tokenized-key dimension feeds the ambiguity agg, the head/tail
-    # split's filters, the hot-head top-k and the head collect: materialize
+    # The tokenized-key dimension feeds the ambiguity agg and the dictionary
+    # collect or the head/tail split and the head collect: materialize
     # it once (its row count is the alias-pair count), and free it once
     # the context's own tables are built.
     keyed, n_pairs = caches.materialize(alias_join_keys(cands))
@@ -225,8 +225,8 @@ def _dict_ctx(spark: SparkSession, pages: DataFrame, redirects: DataFrame,
         logger.info("dictionary_strategy=auto: %d alias pairs -> %s",
                     n_pairs, strategy)
     if strategy == "broadcast":
-        ctx.update(mode="broadcast",
-                   alias_bc=collect_alias_broadcast(spark, cands))
+        ctx.update(mode="broadcast", alias_bc=collect_alias_broadcast(
+            spark, keyed.select("alias", "entity")))
     else:
         head, tail = split_alias_dictionary(
             cands, hot_k=cfg.dictionary_hot_k,

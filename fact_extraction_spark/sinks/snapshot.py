@@ -48,15 +48,16 @@ def with_part_id(df: DataFrame, key_col: str, num_parts: int = 32) -> DataFrame:
 
 
 def committed_parts(spark: SparkSession, base: str, stage: str) -> DataFrame:
-    """(part_id) partitions already committed for this stage."""
+    """(part_id) partitions already committed for this stage: none without
+    a lineage directory; a lineage that cannot be read raises."""
     lineage_dir = os.path.join(base, "_lineage")
-    try:
-        lineage = spark.read.parquet(lineage_dir)
-    except Exception:
+    path = spark._jvm.org.apache.hadoop.fs.Path(lineage_dir)
+    if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
         return spark.createDataFrame([], "part_id int")
     return (
-        lineage.filter((F.col("stage") == stage)
-                       & (F.col("status") == "committed"))
+        spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_dir)
+        .filter((F.col("stage") == stage)
+                & (F.col("status") == "committed"))
         .select("part_id").distinct()
     )
 

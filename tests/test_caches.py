@@ -69,16 +69,20 @@ def test_model_fields_are_its_stored_tables():
     assert tuple(f.name for f in dataclasses.fields(LearnedModel)) == TABLES
 
 
-@pytest.mark.parametrize("mode", ["anchors", "dictionary"])
+@pytest.mark.parametrize("cfg", [
+    PipelineConfig(articles_limit=0, mention_mode="anchors"),
+    PipelineConfig(articles_limit=0, mention_mode="dictionary"),
+    PipelineConfig(articles_limit=0, canonicalize_output=True),
+], ids=["anchors", "dictionary", "canonicalize"])
 def test_learn_extract_unpersist_release_frees_every_table(spark, tables,
-                                                           mode):
+                                                           cfg):
     """After learn + extract, model.unpersist() and caches.release() leave
     no stored table behind, memoized ones included: a redirects table no
     earlier test has seen gets fresh memo entries. The model stays
     referenced, so the JVM's cleaner cannot drop a leaked table on garbage
     collection. A release between learn and extract frees learn's stages,
-    which the model outlives."""
-    cfg = PipelineConfig(articles_limit=0, mention_mode=mode)
+    which the model outlives; with ``canonicalize_output`` the extract's
+    connected-components rounds are freed too."""
     redirects = tables["redirects"].select("alias", "target")
     caches.release()
     before = _persistent_rdds(spark)

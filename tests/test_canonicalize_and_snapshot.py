@@ -101,6 +101,31 @@ def test_snapshot_commit_evaluates_input_once(spark, tmp_path):
     assert calls.value == n
 
 
+def test_snapshot_commit_raises_on_corrupt_lineage(spark, tmp_path):
+    """An unreadable lineage file is a fault, not "nothing committed": the
+    commit fails instead of rewriting every part and appending its
+    lineage again."""
+    base = tmp_path / "table"
+    (base / "_lineage").mkdir(parents=True)
+    (base / "_lineage" / "part-00000-garbage.parquet").write_bytes(
+        b"not a parquet file")
+    df = snap.with_part_id(_mk_triples(spark, 20), "subj", num_parts=4)
+    with pytest.raises(Exception):
+        snap.commit_partitions(spark, df, str(base), stage="triples")
+    assert not (base / "data").exists()
+
+
+def test_snapshot_commit_over_lineage_without_files(spark, tmp_path):
+    """A lineage directory holding no data file yet (a first lineage
+    append killed before its commit) means nothing committed."""
+    base = tmp_path / "table"
+    (base / "_lineage" / "_temporary").mkdir(parents=True)
+    df = snap.with_part_id(_mk_triples(spark, 20), "subj", num_parts=4)
+    result = snap.commit_partitions(spark, df, str(base), stage="triples")
+    assert result["rows"] == 20
+    assert snap.read_committed(spark, str(base), "triples").count() == 20
+
+
 def test_snapshot_resume_no_dupes_no_gaps(spark, tmp_path):
     """Kill-and-rerun: commit a subset of partitions, then rerun the full
     input — only the missing partitions are processed; nothing duplicates."""

@@ -1,6 +1,8 @@
 """Stage-2 mention detection: AC automaton, anchor tagging, redirects."""
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from fact_extraction_spark import caches
 from fact_extraction_spark.operators.extract_text import explode_sentences, extract_text
 from fact_extraction_spark.operators.mentions import (
@@ -10,6 +12,7 @@ from fact_extraction_spark.operators.mentions import (
     collect_redirect_map,
     detect_dictionary_mentions,
     hot_hits,
+    resolve_redirect_pairs,
     resolve_redirects,
     scan_kernel,
 )
@@ -41,6 +44,77 @@ def test_resolve_redirects_multi_hop(spark, tables):
     # 2-hop chain Old_Veldt -> Veldt_Haven -> Veldt_Harbor collapses
     assert ("Old_Veldt", "Veldt_Harbor") in resolved
     assert ("Veldt_Haven", "Veldt_Harbor") in resolved
+
+
+_CHAIN7 = [(f"a{i}", f"a{i + 1}") for i in range(1, 7)]
+
+
+@pytest.mark.parametrize("rows,max_hops,pairs,rmap", [
+    ([("A", "B"), ("B", "C"), ("C", "D")], 8,
+     {("A", "D"), ("B", "D"), ("C", "D")}, {"A": "D", "B": "D", "C": "D"}),
+    ([("A", "B"), ("B", "A")], 8,
+     {("A", "A"), ("B", "B")}, {"A": "A", "B": "B"}),
+    ([("A", "B"), ("B", "C"), ("C", "A")], 8,
+     {("A", "B"), ("B", "C"), ("C", "A")}, {"A": "B", "B": "C", "C": "A"}),
+    ([("A", "A"), ("X", "A")], 8,
+     {("A", "A"), ("X", "A")}, {"A": "A", "X": "A"}),
+    ([("A", "B"), ("A", "C"), ("B", "D")], 8,
+     {("A", "C"), ("A", "D"), ("B", "D")}, {"A": "C", "B": "D"}),
+    ([("A", None), (None, "B"), ("C", "A"), ("B", "E")], 8,
+     {("A", None), ("B", "E"), ("C", "A"), (None, "E")},
+     {"A": None, "B": "E", "C": "A", None: "E"}),
+    (_CHAIN7, 2,
+     {("a1", "a5"), ("a2", "a6"), ("a3", "a7"), ("a4", "a7"), ("a5", "a7"),
+      ("a6", "a7")},
+     {f"A{i}": "A7" for i in range(1, 7)}),
+], ids=["chain", "cycle2", "cycle3", "self_loop", "fan_out", "nulls",
+        "chain_2_hops"])
+def test_resolve_redirects_hand_built(spark, rows, max_hops, pairs, rmap):
+    """One hop replaces (a, t) with (a, coalesce(n, t)) for every (t, n);
+    NULL never matches; the hops stop at the first without a non-NULL n or
+    after max_hops. The map always resolves with the default 8 hops."""
+    redirects = spark.createDataFrame(rows, "alias string, target string")
+    got = resolve_redirects(redirects, max_hops).collect()
+    assert {(r["alias"], r["target"]) for r in got} == pairs
+    assert len(got) == len(pairs)
+    assert collect_redirect_map(spark, redirects).value == rmap
+    caches.release()
+
+
+def test_collect_redirect_map_is_one_job(spark, tables):
+    """A redirects table no earlier call has seen is resolved, and its
+    map built, by one collect: one Spark job."""
+    redirects = tables["redirects"].select("alias", "target")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    rmap = collect_redirect_map(spark, redirects)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(set(tracker.getJobIdsForGroup(None)) - before) == 1
+    assert rmap.value["Old_Veldt"] == "Veldt_Harbor"
+    caches.release()
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.data())
+def test_resolve_redirect_pairs_reaches_chain_ends(data):
+    """Acyclic, NULL-free, one target per alias: every alias whose chain
+    has at most 2^max_hops links resolves to the chain's end."""
+    n = data.draw(st.integers(1, 40))
+    # node i points to a larger node, or ends a chain
+    parent = [data.draw(st.one_of(st.none(), st.integers(i + 1, n)))
+              if i < n else None for i in range(n + 1)]
+    pairs = data.draw(st.permutations(
+        [(f"n{i}", f"n{p}") for i, p in enumerate(parent) if p is not None]))
+    max_hops = data.draw(st.integers(0, 4))
+    resolved = dict(resolve_redirect_pairs(pairs, max_hops))
+    assert len(resolved) == len(pairs)
+    for i, p in enumerate(parent):
+        links, end = 0, i
+        while parent[end] is not None:
+            links, end = links + 1, parent[end]
+        if p is not None and links <= 2 ** max_hops:
+            assert resolved[f"n{i}"] == f"n{end}"
 
 
 def test_anchor_mentions_resolve_aliases(spark, tables):
