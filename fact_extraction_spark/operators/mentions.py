@@ -54,6 +54,7 @@ from __future__ import annotations
 import re
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -408,7 +409,13 @@ def _redirects(redirects: DataFrame, max_hops: int = 8):
             old = mapping.get(alias)
             if old is None or target is not None and target < old:
                 mapping[alias] = target
-        return (spark.createDataFrame(pairs, "alias string, target string"),
+        resolved = pa.table({"alias": [a for a, _ in pairs],
+                             "target": [t for _, t in pairs]},
+                            schema=pa.schema([("alias", pa.string()),
+                                              ("target", pa.string())]))
+        # an Arrow table is a local relation: reading it starts no Python
+        # worker, where a list of rows is read through one
+        return (spark.createDataFrame(resolved),
                 spark.sparkContext.broadcast(mapping))
     return caches.memo(("redirects", max_hops), (redirects,), build)
 

@@ -33,6 +33,13 @@ def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
     return f"{max(1024, min(total_mb // 4, total_mb - 2048 - 512 * cpus))}m"
 
 
+def runs_engine_daemon(master: str) -> bool:
+    """Whether a session on ``master`` starts its Python workers from
+    ``worker_daemon``: only a local master, whose workers read the
+    driver-local ``PYTHONPATH`` that holds the engine."""
+    return master == "local" or master.startswith("local[")
+
+
 def get_spark(
     app_name: str = "fact_extraction_spark",
     master: str | None = None,
@@ -45,6 +52,17 @@ def get_spark(
     ``spark-submit`` (a Python driver launched by the JVM, which hands it
     ``PYSPARK_GATEWAY_PORT``) every key the submitter set, its master
     included, is kept: the defaults fill in only the rest.
+
+    A local master runs one warm pool of Python workers, forked from
+    ``fact_extraction_spark.worker_daemon``, which imports pandas, pyarrow
+    and the engine's UDF modules once per pool and, on CPython < 3.13,
+    guards the zip importers so a task does not re-read ``pyspark.zip``.
+    Spark keys its pools by worker environment, and SQL runners add
+    ``SPARK_SIMPLIFIED_TRACEBACK`` to it where the RDD runner behind
+    ``createDataFrame(list)`` does not, so the simplified traceback is off:
+    both then share the one pool, and a UDF error's text also carries
+    pyspark's own frames. Other masters keep pyspark's own daemon, since
+    the engine is on their workers' path only where the submitter put it.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -68,6 +86,8 @@ def get_spark(
         master = f"local[{cpus}]"
     if master:
         builder = builder.master(master)
+    else:
+        master = SparkConf().get("spark.master", "")
 
     if shuffle_partitions is None:
         # On a real cluster this should be ~2-3x total cores; locally match
@@ -100,6 +120,12 @@ def get_spark(
         "spark.ui.enabled": "false",
         "spark.executorEnv.PYTHONPATH": os.environ["PYTHONPATH"],
     }
+    if runs_engine_daemon(master):
+        conf.update({
+            "spark.python.daemon.module": "fact_extraction_spark.worker_daemon",
+            "spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled":
+                "false",
+        })
     conf = {k: v for k, v in conf.items() if k not in submitted}
     if extra_conf:
         conf.update(extra_conf)

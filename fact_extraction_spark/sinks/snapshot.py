@@ -32,13 +32,19 @@ from __future__ import annotations
 import os
 import uuid
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from fact_extraction_spark import caches
 
-LINEAGE_SCHEMA = ("snapshot_id string, part_id int, stage string, "
-                  "status string, row_count long")
+# Lineage rows are made on the driver: as an Arrow table they become a local
+# relation, which no Python worker has to read.
+LINEAGE_SCHEMA = pa.schema([
+    ("snapshot_id", pa.string()), ("part_id", pa.int32()),
+    ("stage", pa.string()), ("status", pa.string()),
+    ("row_count", pa.int64())])
 
 
 def with_part_id(df: DataFrame, key_col: str, num_parts: int = 32) -> DataFrame:
@@ -53,9 +59,11 @@ def committed_parts(spark: SparkSession, base: str, stage: str) -> DataFrame:
     lineage_dir = os.path.join(base, "_lineage")
     path = spark._jvm.org.apache.hadoop.fs.Path(lineage_dir)
     if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
-        return spark.createDataFrame([], "part_id int")
+        return spark.createDataFrame(
+            LINEAGE_SCHEMA.empty_table().select(["part_id"]))
     return (
-        spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_dir)
+        spark.read.schema(from_arrow_schema(LINEAGE_SCHEMA))
+        .parquet(lineage_dir)
         .filter((F.col("stage") == stage)
                 & (F.col("status") == "committed"))
         .select("part_id").distinct()
@@ -97,9 +105,13 @@ def commit_partitions(spark: SparkSession, df: DataFrame, base: str,
     caches.free(remaining)
 
     snapshot_id = uuid.uuid4().hex[:12]
-    lineage_rows = [(snapshot_id, int(p), stage, "committed", int(c))
-                    for p, c in counts]
-    (spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA)
+    lineage_rows = pa.table({
+        "snapshot_id": [snapshot_id] * len(counts),
+        "part_id": [p for p, _ in counts],
+        "stage": [stage] * len(counts),
+        "status": ["committed"] * len(counts),
+        "row_count": [c for _, c in counts]}, schema=LINEAGE_SCHEMA)
+    (spark.createDataFrame(lineage_rows)
      .coalesce(1).write.mode("append")
      .parquet(os.path.join(base, "_lineage")))
     return {"snapshot_id": snapshot_id, "parts": len(counts), "rows": rows}

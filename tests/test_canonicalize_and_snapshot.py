@@ -281,3 +281,30 @@ def test_pipeline_canonicalize_output_flag(spark, tables):
                   tables["redirects"], cfg)
     raw_subjects = {r["subj"] for r in raw.select("subj").distinct().collect()}
     assert "Old_Veldt" in raw_subjects
+
+
+def test_snapshot_driver_rows_start_no_python_worker(spark, tmp_path,
+                                                     monkeypatch):
+    """The sink's driver-made tables (the empty committed set of a fresh
+    base and the lineage rows) are local relations: reading them runs
+    through no PythonRDD, so no Python worker starts for them."""
+    made = []
+    create = spark.createDataFrame
+
+    def spy(*args, **kwargs):
+        made.append(create(*args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(spark, "createDataFrame", spy)
+    df = snap.with_part_id(_mk_triples(spark, 20), "subj", num_parts=4)
+    result = snap.commit_partitions(spark, df, str(tmp_path / "t"), "triples")
+    assert result["parts"] == 4
+    assert [d.columns for d in made] == [
+        ["part_id"], ["snapshot_id", "part_id", "stage", "status",
+                      "row_count"]]
+    for d in made:
+        assert "PythonRDD" not in d._jdf.queryExecution().toRdd().toDebugString()
+    assert made[0].schema.simpleString() == "struct<part_id:int>"
+    assert made[1].schema.simpleString() == (
+        "struct<snapshot_id:string,part_id:int,stage:string,status:string,"
+        "row_count:bigint>")

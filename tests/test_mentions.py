@@ -81,6 +81,23 @@ def test_resolve_redirects_hand_built(spark, rows, max_hops, pairs, rmap):
     caches.release()
 
 
+@pytest.mark.parametrize("rows,pairs", [
+    ([("A", None), ("B", "A")], {("A", None), ("B", "A")}),
+    ([], set()),
+], ids=["null_target", "empty"])
+def test_resolved_redirects_are_a_local_relation(spark, rows, pairs):
+    """The resolved pairs are shipped back from the driver as a local
+    relation (no PythonRDD, so no Python worker reads them) that keeps
+    its schema with NULL targets and with no rows."""
+    redirects = spark.createDataFrame(rows, "alias string, target string")
+    resolved = resolve_redirects(redirects)
+    plan = resolved._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in plan
+    assert resolved.schema.simpleString() == "struct<alias:string,target:string>"
+    assert {tuple(r) for r in resolved.collect()} == pairs
+    caches.release()
+
+
 def test_collect_redirect_map_is_one_job(spark, tables):
     """A redirects table no earlier call has seen is resolved, and its
     map built, by one collect: one Spark job."""

@@ -4,7 +4,8 @@ import os
 
 import pytest
 
-from fact_extraction_spark.session import default_driver_memory
+from fact_extraction_spark.session import (
+    default_driver_memory, runs_engine_daemon)
 
 GIB_KB = 1024 * 1024
 
@@ -40,3 +41,11 @@ def test_driver_heap_rule_and_override(tmp_path, monkeypatch):
 def test_session_requests_the_derived_heap(spark):
     conf = spark.sparkContext.getConf()
     assert conf.get("spark.driver.memory") == default_driver_memory()
+
+
+@pytest.mark.parametrize("master,daemon", [
+    ("local", True), ("local[4]", True), ("local[*]", True),
+    ("local[4,2]", True), ("yarn", False), ("spark://h:7077", False),
+])
+def test_engine_daemon_only_on_local_masters(master, daemon):
+    assert runs_engine_daemon(master) is daemon
