@@ -80,30 +80,6 @@ def slim_score_windows(windows: DataFrame) -> DataFrame:
                           hashed_slot_keys().alias("slot_keys"))
 
 
-def _entity_side_scores(types: DataFrame, type_probs: DataFrame, side: str) -> DataFrame:
-    """(entity, pred, prob_sum) — Σ P(rel|type) over the entity's types.
-
-    Reference spelling: the hot path is ``fused_side_scores`` (one types
-    traversal for both sides); this per-side form pins its equivalence in
-    test_fused_side_scores_matches_reference."""
-    side_probs = F.broadcast(
-        type_probs.filter(F.col("side") == side).select("pred", "type", "probability"))
-    return (
-        types.join(side_probs, "type")
-        .groupBy("entity", "pred")
-        .agg(F.sum("probability").alias("prob_sum"))
-    )
-
-
-def _gate_pairs(types: DataFrame, pattern_types: DataFrame, side: str) -> DataFrame:
-    """(entity, pred) pairs whose type sets intersect the learned gating set
-    (fact_extractor.py:97-109 reasonable-relations filter). Reference
-    spelling — see ``fused_side_scores`` / ``_entity_side_scores``."""
-    gate = F.broadcast(
-        pattern_types.filter(F.col("side") == side).select("pred", "type"))
-    return types.join(gate, "type").select("entity", "pred").distinct()
-
-
 def fused_side_scores(types: DataFrame, pattern_types: DataFrame,
                       type_probs: DataFrame, preds: DataFrame,
                       n_types: DataFrame, ents_both: DataFrame,
@@ -111,9 +87,10 @@ def fused_side_scores(types: DataFrame, pattern_types: DataFrame,
     """(entity, side, pred, type_score) for BOTH candidate sides in ONE
     types traversal.
 
-    Exact-algebra fusion of the former per-side chain (still kept above as
-    the reference spelling): ``_gate_pairs`` ∩ ents → left-join
-    ``_entity_side_scores`` → ÷ n_types → early-exit filter. The gating set
+    Exact-algebra fusion of the former per-side chain (its reference
+    spelling lives in test_fused_side_scores_matches_reference): gate
+    pairs ∩ ents → left-join per-side Σ P(rel|type) → ÷ n_types →
+    early-exit filter. The gating set
     (pattern_types) and the probability table (type_probs) are both keyed
     (side, pred, type): union them into one broadcast dim and aggregate the
     types join once. max(is_gate) recovers the gate (an (entity, pred)

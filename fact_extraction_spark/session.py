@@ -63,6 +63,20 @@ def get_spark(
     both then share the one pool, and a UDF error's text also carries
     pyspark's own frames. Other masters keep pyspark's own daemon, since
     the engine is on their workers' path only where the submitter put it.
+
+    A local master's JVM that ``get_spark`` launches runs two JIT compiler
+    threads (``-XX:CICompilerCount=2``, one C1 and one C2; HotSpot gives 4
+    cores three): in local mode it is also the executor, and C2 compiling
+    Spark itself was the largest CPU share of a cold extract, while what
+    runs hot still gets C2 code. The key is
+    ``spark.driver.defaultJavaOptions``, which the launcher puts ahead of
+    ``extraJavaOptions`` (a caller's own JVM options keep both); an
+    ``extra_conf`` value of ``""`` restores HotSpot's count. Not set under
+    ``spark-submit``, whose JVM already runs. Against three threads on 4
+    cores: a cold extract +21-25 % pages per CPU-s; learn + extract in one
+    session (``jobs/run_pipeline.py``) -15 % CPU at no wall cost; tier-1
+    and the 40 declared queries within the host's spread; a warm extract
+    thin within 3 %, fat +6-20 % CPU.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -94,6 +108,15 @@ def get_spark(
         # core count so AQE coalescing has room without tiny-task overhead.
         shuffle_partitions = int(cpus) if str(cpus).isdigit() else 32
 
+    return builder.config(map=session_conf(
+        master, shuffle_partitions, submitted, extra_conf)).getOrCreate()
+
+
+def session_conf(master: str, shuffle_partitions: int, submitted=frozenset(),
+                 extra_conf: dict[str, str] | None = None) -> dict[str, str]:
+    """``get_spark``'s conf over ``master``, built without a JVM: engine
+    defaults less every ``submitted`` key (empty unless ``spark-submit``
+    launched the JVM), then ``extra_conf``. Reads PYTHONPATH and meminfo."""
     conf = {
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
         # AQE: runtime re-planning, shuffle coalescing, skew-join splitting.
@@ -126,9 +149,9 @@ def get_spark(
             "spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled":
                 "false",
         })
+        if not submitted:   # get_spark launches this JVM
+            conf["spark.driver.defaultJavaOptions"] = "-XX:CICompilerCount=2"
     conf = {k: v for k, v in conf.items() if k not in submitted}
     if extra_conf:
         conf.update(extra_conf)
-    for k, v in conf.items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()
+    return conf

@@ -15,6 +15,11 @@ Local smoke (what tests/test_spark_submit.py runs)::
     spark-submit --master local[4] --py-files dist/fact_extraction_spark.zip \
         jobs/run_pipeline.py --fixture 30 --out /tmp/kg_out
 
+spark-submit launches its own JVM, so ``get_spark``'s JIT flag (two
+compiler threads, set only on a JVM it launches itself) does not apply
+here: a local submit gets it by passing
+``--conf spark.driver.defaultJavaOptions=-XX:CICompilerCount=2``.
+
 Inputs are parquet directories (Iceberg tables on a real cluster — swap
 ``spark.read.parquet`` for ``spark.read.table``); the output is committed
 through the snapshot sink (per-partition lineage rows, resume-safe).

@@ -398,6 +398,28 @@ def test_scorer_builds_one_side_table(spark, tiny_mentions):
     assert rows[("Dora", "Nora")]["score"] == pytest.approx(exp_nora_obj)
 
 
+def _entity_side_scores(types, type_probs, side):
+    """(entity, pred, prob_sum) — Σ P(rel|type) over the entity's types,
+    one side at a time: the reference spelling of ``fused_side_scores``'
+    probability sum."""
+    side_probs = F.broadcast(
+        type_probs.filter(F.col("side") == side).select("pred", "type", "probability"))
+    return (
+        types.join(side_probs, "type")
+        .groupBy("entity", "pred")
+        .agg(F.sum("probability").alias("prob_sum"))
+    )
+
+
+def _gate_pairs(types, pattern_types, side):
+    """(entity, pred) pairs whose type sets intersect the learned gating set
+    (fact_extractor.py:97-109 reasonable-relations filter): the reference
+    spelling of ``fused_side_scores``' gate."""
+    gate = F.broadcast(
+        pattern_types.filter(F.col("side") == side).select("pred", "type"))
+    return types.join(gate, "type").select("entity", "pred").distinct()
+
+
 def test_fused_side_scores_matches_reference(spark):
     """The round-7 fused side-table build (one types traversal for both
     sides) must be row-identical to the per-side reference chain
@@ -433,8 +455,7 @@ def test_fused_side_scores_matches_reference(spark):
         [("D",), ("Both",), ("Untyped",)], "entity string")
 
     from pyspark.sql import functions as F
-    from fact_extraction_spark.operators.scoring import (
-        _entity_side_scores, _gate_pairs, fused_side_scores)
+    from fact_extraction_spark.operators.scoring import fused_side_scores
 
     n_types = types.groupBy("entity").agg(F.count("*").alias("n_types"))
 

@@ -5,7 +5,7 @@ import os
 import pytest
 
 from fact_extraction_spark.session import (
-    default_driver_memory, runs_engine_daemon)
+    default_driver_memory, runs_engine_daemon, session_conf)
 
 GIB_KB = 1024 * 1024
 
@@ -49,3 +49,47 @@ def test_session_requests_the_derived_heap(spark):
 ])
 def test_engine_daemon_only_on_local_masters(master, daemon):
     assert runs_engine_daemon(master) is daemon
+
+
+TWO_COMPILERS = "-XX:CICompilerCount=2"
+JAVA_OPTS = "spark.driver.defaultJavaOptions"
+
+
+def test_session_jvm_runs_two_compiler_threads(spark):
+    jvm = spark.sparkContext._jvm
+    diagnostic = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
+    assert diagnostic.getVMOption("CICompilerCount").getValue() == "2"
+    # C2 stays on: a long-lived session still gets its optimised code
+    assert diagnostic.getVMOption("TieredStopAtLevel").getValue() == "4"
+
+
+@pytest.fixture
+def engine_path(monkeypatch):
+    """The ``PYTHONPATH`` get_spark sets before it builds the conf."""
+    monkeypatch.setenv("PYTHONPATH", "/engine")
+
+
+@pytest.mark.parametrize("master,two_compilers", [
+    ("local[4]", True), ("yarn", False), ("spark://h:7077", False),
+])
+def test_jit_conf_on_launched_local_jvms(engine_path, master, two_compilers):
+    conf = session_conf(master, 8)
+    assert (conf.get(JAVA_OPTS) == TWO_COMPILERS) is two_compilers
+
+
+def test_jit_conf_keeps_callers_java_options(engine_path):
+    tmpdir = {"spark.driver.extraJavaOptions": "-Djava.io.tmpdir=/x"}
+    conf = session_conf("local[4]", 8, extra_conf=tmpdir)
+    assert conf[JAVA_OPTS] == TWO_COMPILERS
+    assert conf["spark.driver.extraJavaOptions"] == "-Djava.io.tmpdir=/x"
+    # the way back to HotSpot's own count
+    assert session_conf("local[4]", 8, extra_conf={JAVA_OPTS: ""})[JAVA_OPTS] == ""
+
+
+def test_jit_conf_not_added_under_spark_submit(engine_path):
+    # spark-submit's JVM is already running: the key would not take effect
+    conf = session_conf("local[4]", 8, {"spark.master", "spark.app.name"})
+    assert JAVA_OPTS not in conf
+    assert conf["spark.python.daemon.module"] == (
+        "fact_extraction_spark.worker_daemon")
